@@ -31,13 +31,7 @@ from pyspark.sql.types import (
     ArrayType,
     BooleanType,
     DataType,
-    DecimalType,
     DoubleType,
-    FloatType,
-    IntegerType,
-    IntegralType,
-    LongType,
-    MapType,
     NullType,
     NumericType,
     StringType,
@@ -46,16 +40,6 @@ from pyspark.sql.types import (
 )
 
 from .schema.ast import (
-    AEq,
-    AGe,
-    AGt,
-    ALe,
-    ALt,
-    NEq,
-    NGe,
-    NGt,
-    NLe,
-    NLt,
     SArray,
     SBoolean,
     Schema,
@@ -66,19 +50,12 @@ from .schema.ast import (
     SText,
     SUnion,
     TEnum,
-    TEq,
-    TGe,
-    TGt,
-    TLe,
-    TLt,
     TRegex,
     missing_field_message,
 )
 from .schema.interpret import validate_parsed
 
 VIOLATION_DDL = "array<struct<path:string,error:string>>"
-
-_EMPTY = None  # lazily built typed empty array
 
 
 def _empty_violations() -> Column:
@@ -176,9 +153,6 @@ def _interpreted_violations(schema: Schema, value: Column, path: Column) -> Colu
     def _run(values: pd.Series, paths: pd.Series) -> pd.Series:
         out = []
         for v, p in zip(values, paths):
-            if v is None:
-                out.append([])
-                continue
             viols: list[tuple[str, str]] = []
             validate_parsed(captured, _normalize_py(v), (), viols)
             prefix = p or ""
@@ -194,61 +168,28 @@ def _interpreted_violations(schema: Schema, value: Column, path: Column) -> Colu
 # Constraint predicates (the §2.1 operator table)
 # ---------------------------------------------------------------------------
 
-def _text_cell(c, value: Column, path: Column) -> Column:
-    ln = F.length(value)
-    if isinstance(c, TEq):
-        ok = ln == F.lit(c.n)
-    elif isinstance(c, TLt):
-        ok = ln < F.lit(c.n)
-    elif isinstance(c, TLe):
-        ok = ln <= F.lit(c.n)
-    elif isinstance(c, TGt):
-        ok = ln > F.lit(c.n)
-    elif isinstance(c, TGe):
-        ok = ln >= F.lit(c.n)
-    elif isinstance(c, TRegex):
-        ok = value.rlike(c.pattern)  # unanchored search = matchTest
-    elif isinstance(c, TEnum):
-        ok = value.isin(*c.values) if c.values else F.lit(False)
-    else:
-        raise TypeError(f"unknown text constraint {c!r}")
-    # null value → ok is null → when() falls through → no violation cell
-    # (structural layer reports the null; mirrors parse-before-validate)
-    return F.when(~ok, _viol(path, c.message()))
+# Spark measures of a bound constraint's family (schema.ast.TextConstraint
+# etc.); F.length counts code points, like Data.Text length
+_MEASURES = {"length": F.length, "value": lambda v: v, "size": F.size}
 
 
-def _number_cell(c, value: Column, path: Column) -> Column:
-    lit = F.lit(c.n)
-    if isinstance(c, NEq):
-        ok = value == lit
-    elif isinstance(c, NGt):
-        ok = value > lit
-    elif isinstance(c, NGe):
-        ok = value >= lit
-    elif isinstance(c, NLt):
-        ok = value < lit
-    elif isinstance(c, NLe):
-        ok = value <= lit
-    else:
-        raise TypeError(f"unknown number constraint {c!r}")
-    return F.when(~ok, _viol(path, c.message()))
+def _constraint_pred(c, value: Column) -> Column:
+    """The constraint's pass predicate — null when ``value`` is null.
+    Feeds both the violation cells and the valid-mask."""
+    if isinstance(c, TRegex):
+        return value.rlike(c.pattern)  # unanchored search = matchTest
+    if isinstance(c, TEnum):
+        return value.isin(*c.values) if c.values else F.lit(False)
+    return c.holds(_MEASURES[c.measure](value))
 
 
-def _array_cell(c, value: Column, path: Column) -> Column:
-    sz = F.size(value)
-    if isinstance(c, AEq):
-        ok = sz == F.lit(c.n)
-    elif isinstance(c, AGt):
-        ok = sz > F.lit(c.n)
-    elif isinstance(c, AGe):
-        ok = sz >= F.lit(c.n)
-    elif isinstance(c, ALt):
-        ok = sz < F.lit(c.n)
-    elif isinstance(c, ALe):
-        ok = sz <= F.lit(c.n)
-    else:
-        raise TypeError(f"unknown array constraint {c!r}")
-    return F.when(~ok, _viol(path, c.message()))
+def _constraint_cells(schema: Schema, value: Column, path: Column) -> Column:
+    # null value → predicate is null → when() falls through → no violation
+    # cell (structural layer reports the null; mirrors parse-before-validate)
+    return _compact([
+        F.when(~_constraint_pred(c, value), _viol(path, c.message()))
+        for c in schema.constraints
+    ])
 
 
 # ---------------------------------------------------------------------------
@@ -269,6 +210,12 @@ def compile_violations(schema: Schema, value: Column, path: Column) -> Column:
                 parts.append(compile_violations(fschema, value[name], fpath))
             body = _concat_all(parts)
             return F.when(value.isNull(), _empty_violations()).otherwise(body)
+        if isinstance(schema, SOptional):
+            # unwrap so an optional object routes per field too: a struct
+            # column reaches a pandas UDF as a DataFrame, not as dicts
+            return F.when(value.isNull(), _empty_violations()).otherwise(
+                compile_violations(schema.inner, value, path)
+            )
         if isinstance(schema, SUnion):
             # per-branch routing: the interpreter fallback expects raw
             # values, not the struct-of-branches column encoding
@@ -286,14 +233,8 @@ def compile_violations(schema: Schema, value: Column, path: Column) -> Column:
 def _compile_violations_native(
     schema: Schema, value: Column, path: Column
 ) -> Column:
-    if isinstance(schema, SText):
-        return _compact([
-            _text_cell(c, value, path) for c in schema.constraints
-        ])
-    if isinstance(schema, SNumber):
-        return _compact([
-            _number_cell(c, value, path) for c in schema.constraints
-        ])
+    if isinstance(schema, (SText, SNumber)):
+        return _constraint_cells(schema, value, path)
     if isinstance(schema, (SBoolean, SNull)):
         return _empty_violations()  # vacuously valid — Validation.hs:217-218
     if isinstance(schema, SOptional):
@@ -302,9 +243,7 @@ def _compile_violations_native(
             _compile_violations_native(schema.inner, value, path)
         )
     if isinstance(schema, SArray):
-        own = _compact([
-            _array_cell(c, value, path) for c in schema.constraints
-        ])
+        own = _constraint_cells(schema, value, path)
         elem = _elem_violations(schema.item, value, path)
         combined = _concat_all([own, elem]) if elem is not None else own
         return F.when(value.isNull(), _empty_violations()).otherwise(combined)
@@ -372,6 +311,12 @@ UNION_NO_MATCH = "empty union"  # Schema.hs:515 — the alternative chain's
 # terminal failure message when no union branch matches
 
 
+def _required(schema: Schema) -> bool:
+    """A null in this position is a structural error: optionals and
+    null types accept it, and a union reports its own no-match."""
+    return not isinstance(schema, (SOptional, SNull, SUnion))
+
+
 def structural_possible(schema: Schema) -> bool:
     """True when the subtree can produce structural (decode-layer)
     errors — i.e. :func:`_structural_child` returns a non-None column.
@@ -386,10 +331,7 @@ def structural_possible(schema: Schema) -> bool:
     if isinstance(schema, SObject):
         return True
     if isinstance(schema, SArray):
-        return (
-            not isinstance(schema.item, (SOptional, SNull, SUnion))
-            or structural_possible(schema.item)
-        )
+        return _required(schema.item) or structural_possible(schema.item)
     if isinstance(schema, SUnion):
         return _union_no_match_possible(schema) or any(
             structural_possible(a) for a in schema.alternatives
@@ -512,7 +454,7 @@ def compile_structural(schema: Schema, value: Column, path: Column) -> Column:
         for name, fschema in schema.fields:
             fv = value[name]
             fpath = F.concat(path, F.lit("." + name))
-            if not isinstance(fschema, (SOptional, SNull, SUnion)):
+            if _required(fschema):
                 cells.append(
                     F.when(
                         fv.isNull(),
@@ -544,7 +486,7 @@ def _structural_child(schema: Schema, value: Column, path: Column) -> Column | N
             return None
         return _union_structural(schema, value, path)
     if isinstance(schema, SArray):
-        elem_required = not isinstance(schema.item, (SOptional, SNull, SUnion))
+        elem_required = _required(schema.item)
         elem_has_struct = structural_possible(schema.item)
         if not elem_required and not elem_has_struct:
             return None
@@ -740,52 +682,8 @@ def _constraint_ok(schema: Schema, value: Column) -> Column:
     """AND of this node's own constraint predicates (null value passes —
     the structural mask covers nulls)."""
     ok = F.lit(True)
-    if isinstance(schema, SText):
-        ln = F.length(value)
-        for c in schema.constraints:
-            if isinstance(c, TEq):
-                p = ln == c.n
-            elif isinstance(c, TLt):
-                p = ln < c.n
-            elif isinstance(c, TLe):
-                p = ln <= c.n
-            elif isinstance(c, TGt):
-                p = ln > c.n
-            elif isinstance(c, TGe):
-                p = ln >= c.n
-            elif isinstance(c, TRegex):
-                p = value.rlike(c.pattern)
-            elif isinstance(c, TEnum):
-                p = value.isin(*c.values) if c.values else F.lit(False)
-            ok = ok & F.coalesce(p, F.lit(True))
-    elif isinstance(schema, SNumber):
-        for c in schema.constraints:
-            lit = F.lit(c.n)
-            if isinstance(c, NEq):
-                p = value == lit
-            elif isinstance(c, NGt):
-                p = value > lit
-            elif isinstance(c, NGe):
-                p = value >= lit
-            elif isinstance(c, NLt):
-                p = value < lit
-            elif isinstance(c, NLe):
-                p = value <= lit
-            ok = ok & F.coalesce(p, F.lit(True))
-    elif isinstance(schema, SArray):
-        sz = F.size(value)
-        for c in schema.constraints:
-            if isinstance(c, AEq):
-                p = sz == c.n
-            elif isinstance(c, AGt):
-                p = sz > c.n
-            elif isinstance(c, AGe):
-                p = sz >= c.n
-            elif isinstance(c, ALt):
-                p = sz < c.n
-            elif isinstance(c, ALe):
-                p = sz <= c.n
-            ok = ok & F.coalesce(p, F.lit(True))
+    for c in schema.constraints:
+        ok = ok & F.coalesce(_constraint_pred(c, value), F.lit(True))
     return ok
 
 
@@ -843,12 +741,12 @@ def _mask_node(schema: Schema, value: Column, *, required: bool) -> Column:
                     F.lit(True),
                 )
         return ok
-    own = _constraint_ok(schema, value)
     present = value.isNotNull() if required else F.lit(True)
     if isinstance(schema, (SText, SNumber)):
-        return present & own
+        return present & _constraint_ok(schema, value)
     if isinstance(schema, SArray):
-        elem_required = not isinstance(schema.item, (SOptional, SNull, SUnion))
+        own = _constraint_ok(schema, value)
+        elem_required = _required(schema.item)
         # SAME predicate as the structural compiler (structural_possible)
         # so mask and structural can never disagree (round-1 ADVICE bug)
         needs_descent = elem_required or _has_any_constraint(schema.item) \
@@ -863,8 +761,8 @@ def _mask_node(schema: Schema, value: Column, *, required: bool) -> Column:
     if isinstance(schema, SObject):
         ok = present
         for name, fschema in schema.fields:
-            freq = not isinstance(fschema, (SOptional, SNull, SUnion))
-            field_ok = _mask_node(fschema, value[name], required=freq)
+            field_ok = _mask_node(
+                fschema, value[name], required=_required(fschema))
             # a null parent struct is itself the failure; guard children
             ok = ok & F.coalesce(field_ok, F.lit(not required))
         return ok

@@ -23,12 +23,26 @@ Constraint kinds mirror ``Schema.hs:41-48`` (text), ``:121-127`` (number),
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import operator
+from dataclasses import dataclass
+from typing import ClassVar
 
 
 # ---------------------------------------------------------------------------
 # Constraints
 # ---------------------------------------------------------------------------
+
+#: The five comparison operators a bound constraint can declare. Spark
+#: ``Column`` and Python numbers both overload them, so this one table
+#: evaluates a constraint in Catalyst and in the interpreter alike.
+_COMPARATORS = {
+    "==": operator.eq,
+    "<": operator.lt,
+    "<=": operator.le,
+    ">": operator.gt,
+    ">=": operator.ge,
+}
+
 
 class Constraint:
     """Base for all constraints."""
@@ -37,65 +51,76 @@ class Constraint:
 
 
 class TextConstraint(Constraint):
+    """Bounds compare the codepoint length (``Data.Text`` length)."""
+
     __slots__ = ()
+    measure = "length"
+    prefix = "length should be"
 
 
 class NumberConstraint(Constraint):
+    """Bounds compare the value itself."""
+
     __slots__ = ()
+    measure = "value"
+    prefix = "should be"
 
 
 class ArrayConstraint(Constraint):
+    """Bounds compare the element count."""
+
     __slots__ = ()
+    measure = "size"
+    prefix = "length should be"
 
 
 @dataclass(frozen=True)
-class TEq(TextConstraint):
+class Comparison(Constraint):
+    """``measure(value) op n`` — the 15 bound constraints. A subclass
+    declares only its ``op``; the family base (text/number/array)
+    supplies the measure and the message prefix, so the message is
+    ``"<prefix> <op> <n>"`` (Validation.hs:58-191)."""
+
+    n: int
+    op: ClassVar[str]
+
+    def holds(self, measured):
+        """``measured op n`` — a Python bool, or a Spark ``Column``
+        when ``measured`` is one."""
+        return _COMPARATORS[self.op](measured, self.n)
+
+    def message(self) -> str:
+        return f"{self.prefix} {self.op} {self.n}"
+
+
+class TEq(Comparison, TextConstraint):
     """codepoint length == n — Validation.hs:58-64"""
 
-    n: int
-
-    def message(self) -> str:
-        return f"length should be == {self.n}"
+    op = "=="
 
 
-@dataclass(frozen=True)
-class TLt(TextConstraint):
-    """length < n — Validation.hs:65-71"""
+class TLt(Comparison, TextConstraint):
+    """Validation.hs:65-71"""
 
-    n: int
-
-    def message(self) -> str:
-        return f"length should be < {self.n}"
+    op = "<"
 
 
-@dataclass(frozen=True)
-class TLe(TextConstraint):
-    """length <= n — Validation.hs:72-78"""
+class TLe(Comparison, TextConstraint):
+    """Validation.hs:72-78"""
 
-    n: int
-
-    def message(self) -> str:
-        return f"length should be <= {self.n}"
+    op = "<="
 
 
-@dataclass(frozen=True)
-class TGt(TextConstraint):
-    """length > n — Validation.hs:79-85"""
+class TGt(Comparison, TextConstraint):
+    """Validation.hs:79-85"""
 
-    n: int
-
-    def message(self) -> str:
-        return f"length should be > {self.n}"
+    op = ">"
 
 
-@dataclass(frozen=True)
-class TGe(TextConstraint):
-    """length >= n — Validation.hs:86-92"""
+class TGe(Comparison, TextConstraint):
+    """Validation.hs:86-92"""
 
-    n: int
-
-    def message(self) -> str:
-        return f"length should be >= {self.n}"
+    op = ">="
 
 
 @dataclass(frozen=True)
@@ -152,108 +177,64 @@ def _haskell_show_text(s: str) -> str:
     return "".join(out)
 
 
-def _num_cmp(op: str, n: int) -> str:
-    return f"should be {op} {n}"
-
-
-@dataclass(frozen=True)
-class NEq(NumberConstraint):
+class NEq(Comparison, NumberConstraint):
     """Validation.hs:115-121"""
 
-    n: int
-
-    def message(self) -> str:
-        return _num_cmp("==", self.n)
+    op = "=="
 
 
-@dataclass(frozen=True)
-class NGt(NumberConstraint):
+class NGt(Comparison, NumberConstraint):
     """Validation.hs:122-128"""
 
-    n: int
-
-    def message(self) -> str:
-        return _num_cmp(">", self.n)
+    op = ">"
 
 
-@dataclass(frozen=True)
-class NGe(NumberConstraint):
+class NGe(Comparison, NumberConstraint):
     """Validation.hs:129-135"""
 
-    n: int
-
-    def message(self) -> str:
-        return _num_cmp(">=", self.n)
+    op = ">="
 
 
-@dataclass(frozen=True)
-class NLt(NumberConstraint):
+class NLt(Comparison, NumberConstraint):
     """Validation.hs:136-142"""
 
-    n: int
-
-    def message(self) -> str:
-        return _num_cmp("<", self.n)
+    op = "<"
 
 
-@dataclass(frozen=True)
-class NLe(NumberConstraint):
+class NLe(Comparison, NumberConstraint):
     """Validation.hs:143-149"""
 
-    n: int
-
-    def message(self) -> str:
-        return _num_cmp("<=", self.n)
+    op = "<="
 
 
-@dataclass(frozen=True)
-class AEq(ArrayConstraint):
+class AEq(Comparison, ArrayConstraint):
     """array length == n — Validation.hs:157-163"""
 
-    n: int
-
-    def message(self) -> str:
-        return f"length should be == {self.n}"
+    op = "=="
 
 
-@dataclass(frozen=True)
-class AGt(ArrayConstraint):
+class AGt(Comparison, ArrayConstraint):
     """Validation.hs:164-170"""
 
-    n: int
-
-    def message(self) -> str:
-        return f"length should be > {self.n}"
+    op = ">"
 
 
-@dataclass(frozen=True)
-class AGe(ArrayConstraint):
+class AGe(Comparison, ArrayConstraint):
     """Validation.hs:171-177"""
 
-    n: int
-
-    def message(self) -> str:
-        return f"length should be >= {self.n}"
+    op = ">="
 
 
-@dataclass(frozen=True)
-class ALt(ArrayConstraint):
+class ALt(Comparison, ArrayConstraint):
     """Validation.hs:178-184"""
 
-    n: int
-
-    def message(self) -> str:
-        return f"length should be < {self.n}"
+    op = "<"
 
 
-@dataclass(frozen=True)
-class ALe(ArrayConstraint):
+class ALe(Comparison, ArrayConstraint):
     """Validation.hs:185-191"""
 
-    n: int
-
-    def message(self) -> str:
-        return f"length should be <= {self.n}"
+    op = "<="
 
 
 # ---------------------------------------------------------------------------

@@ -20,16 +20,6 @@ from dataclasses import dataclass
 from typing import Any
 
 from .ast import (
-    AEq,
-    AGe,
-    AGt,
-    ALe,
-    ALt,
-    NEq,
-    NGe,
-    NGt,
-    NLe,
-    NLt,
     SArray,
     SBoolean,
     Schema,
@@ -40,11 +30,6 @@ from .ast import (
     SText,
     SUnion,
     TEnum,
-    TEq,
-    TGe,
-    TGt,
-    TLe,
-    TLt,
     TRegex,
     missing_field_message,
     render_path,
@@ -211,67 +196,20 @@ def structural_parse(schema: Schema, value: Any, path: tuple = ()) -> Any:
 # Constraint validation — Validation.hs:193-244
 # ---------------------------------------------------------------------------
 
-def _text_len(s: str) -> int:
-    # Data.Text length = codepoint count; Python len(str) matches.
-    return len(s)
+# Python measures of a bound constraint's family (ast.TextConstraint etc.):
+# Data.Text length = codepoint count, which Python len(str) matches.
+_MEASURES = {"length": len, "value": lambda v: v, "size": len}
 
 
-def _check_text(value: str, constraints, path: str, out: list) -> None:
+def _check(value, constraints, path: str, out: list) -> None:
     for c in constraints:
-        if isinstance(c, TEq):
-            ok = _text_len(value) == c.n
-        elif isinstance(c, TLt):
-            ok = _text_len(value) < c.n
-        elif isinstance(c, TLe):
-            ok = _text_len(value) <= c.n
-        elif isinstance(c, TGt):
-            ok = _text_len(value) > c.n
-        elif isinstance(c, TGe):
-            ok = _text_len(value) >= c.n
-        elif isinstance(c, TRegex):
+        if isinstance(c, TRegex):
             # unanchored search — matchTest semantics (Validation.hs:96)
             ok = re.search(c.pattern, value) is not None
         elif isinstance(c, TEnum):
             ok = value in c.values
         else:
-            raise TypeError(f"unknown text constraint {c!r}")
-        if not ok:
-            out.append((path, c.message()))
-
-
-def _check_number(value, constraints, path: str, out: list) -> None:
-    for c in constraints:
-        if isinstance(c, NEq):
-            ok = value == c.n
-        elif isinstance(c, NGt):
-            ok = value > c.n
-        elif isinstance(c, NGe):
-            ok = value >= c.n
-        elif isinstance(c, NLt):
-            ok = value < c.n
-        elif isinstance(c, NLe):
-            ok = value <= c.n
-        else:
-            raise TypeError(f"unknown number constraint {c!r}")
-        if not ok:
-            out.append((path, c.message()))
-
-
-def _check_array(value, constraints, path: str, out: list) -> None:
-    n = len(value)
-    for c in constraints:
-        if isinstance(c, AEq):
-            ok = n == c.n
-        elif isinstance(c, AGt):
-            ok = n > c.n
-        elif isinstance(c, AGe):
-            ok = n >= c.n
-        elif isinstance(c, ALt):
-            ok = n < c.n
-        elif isinstance(c, ALe):
-            ok = n <= c.n
-        else:
-            raise TypeError(f"unknown array constraint {c!r}")
+            ok = c.holds(_MEASURES[c.measure](value))
         if not ok:
             out.append((path, c.message()))
 
@@ -286,28 +224,32 @@ def validate_parsed(
 ) -> list[tuple[str, str]]:
     """Recursive constraint walk over an already structurally-parsed value.
     Accumulates ALL violations (monoidal, never fail-fast —
-    Validation.hs:26-28)."""
+    Validation.hs:26-28).
+
+    A null value carries no violations: ``Nothing`` short-circuits valid
+    (:231-234), and where a null is a structural error the parse reports
+    it. The Catalyst compiler's pandas-UDF fallback relies on this — it
+    walks raw column values, whose nulls the parse never saw."""
     if out is None:
         out = []
-    if isinstance(schema, SText):
-        _check_text(value, schema.constraints, render_path(path), out)
-    elif isinstance(schema, SNumber):
-        _check_number(value, schema.constraints, render_path(path), out)
+    if value is None:
+        return out
+    if isinstance(schema, (SText, SNumber)):
+        _check(value, schema.constraints, render_path(path), out)
     elif isinstance(schema, (SBoolean, SNull)):
         pass  # vacuously valid — Validation.hs:217-218
     elif isinstance(schema, SArray):
-        _check_array(value, schema.constraints, render_path(path), out)
+        _check(value, schema.constraints, render_path(path), out)
         for i, item in enumerate(value):
             validate_parsed(
                 schema.item, item, path + (i,), out,
                 validate_unions=validate_unions,
             )
     elif isinstance(schema, SOptional):
-        if value is not None:  # Nothing short-circuits valid (:231-234)
-            validate_parsed(
-                schema.inner, value, path, out,
-                validate_unions=validate_unions,
-            )
+        validate_parsed(
+            schema.inner, value, path, out,
+            validate_unions=validate_unions,
+        )
     elif isinstance(schema, SObject):
         for name, fschema in schema.fields:
             validate_parsed(

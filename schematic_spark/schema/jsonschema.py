@@ -19,9 +19,8 @@ from __future__ import annotations
 from .ast import (
     AEq,
     AGe,
-    AGt,
     ALe,
-    ALt,
+    Comparison,
     NEq,
     NGe,
     NGt,
@@ -39,9 +38,7 @@ from .ast import (
     TEnum,
     TEq,
     TGe,
-    TGt,
     TLe,
-    TLt,
     TRegex,
 )
 
@@ -55,44 +52,52 @@ def to_json_schema(schema: Schema) -> dict:
     return out
 
 
+# (lower, upper) keyword of each comparison measure
+_KEYWORDS = {
+    "length": ("minLength", "maxLength"),
+    "value": ("minimum", "maximum"),
+    "size": ("minItems", "maxItems"),
+}
+
+
+def _comparison_keywords(c: Comparison) -> dict:
+    """Draft-4 keywords of one bound constraint, in the reference's key
+    order."""
+    lo, hi = _KEYWORDS[c.measure]
+    if c.op == "==":
+        return {lo: c.n, hi: c.n}
+    lower = c.op[0] == ">"
+    key = lo if lower else hi
+    if c.op.endswith("="):
+        return {key: c.n}
+    if c.measure == "value":
+        # strict number bounds keep n and set the draft-4 flag
+        flag = "exclusiveMinimum" if lower else "exclusiveMaximum"
+        return {key: c.n, flag: True}
+    # strict length/size bounds become the next integer; ``Lt 0`` clamps
+    # at 0 like the reference, which admits the empty value it rejects
+    if lower:
+        return {key: c.n + 1}
+    return {key: 0 if c.n == 0 else c.n - 1}
+
+
+def _with_constraints(out: dict, constraints) -> dict:
+    for c in constraints:
+        if isinstance(c, TRegex):
+            out["pattern"] = c.pattern
+        elif isinstance(c, TEnum):
+            out["enum"] = list(c.values)
+        else:
+            out.update(_comparison_keywords(c))
+    return out
+
+
 def to_json_schema_inner(schema: Schema) -> dict:
     """Export without the marker (toJsonSchema', JsonSchema.hs:86-124)."""
     if isinstance(schema, SText):
-        out: dict = {"type": "string"}
-        for c in schema.constraints:
-            if isinstance(c, TEq):
-                out["minLength"] = c.n
-                out["maxLength"] = c.n
-            elif isinstance(c, TLe):
-                out["maxLength"] = c.n
-            elif isinstance(c, TLt):
-                out["maxLength"] = 0 if c.n == 0 else c.n - 1
-            elif isinstance(c, TGt):
-                out["minLength"] = c.n + 1
-            elif isinstance(c, TGe):
-                out["minLength"] = c.n
-            elif isinstance(c, TRegex):
-                out["pattern"] = c.pattern
-            elif isinstance(c, TEnum):
-                out["enum"] = list(c.values)
-        return out
+        return _with_constraints({"type": "string"}, schema.constraints)
     if isinstance(schema, SNumber):
-        out = {"type": "number"}
-        for c in schema.constraints:
-            if isinstance(c, NLe):
-                out["maximum"] = c.n
-            elif isinstance(c, NLt):
-                out["maximum"] = c.n
-                out["exclusiveMaximum"] = True
-            elif isinstance(c, NGt):
-                out["minimum"] = c.n
-                out["exclusiveMinimum"] = True
-            elif isinstance(c, NGe):
-                out["minimum"] = c.n
-            elif isinstance(c, NEq):
-                out["minimum"] = c.n
-                out["maximum"] = c.n
-        return out
+        return _with_constraints({"type": "number"}, schema.constraints)
     if isinstance(schema, SBoolean):
         return {"type": "boolean"}
     if isinstance(schema, SNull):
@@ -109,23 +114,10 @@ def to_json_schema_inner(schema: Schema) -> dict:
             },
         }
     if isinstance(schema, SArray):
-        out = {
-            "type": "array",
-            "items": to_json_schema_inner(schema.item),
-        }
-        for c in schema.constraints:
-            if isinstance(c, ALe):
-                out["maxItems"] = c.n
-            elif isinstance(c, ALt):
-                out["maxItems"] = 0 if c.n == 0 else c.n - 1
-            elif isinstance(c, AGt):
-                out["minItems"] = c.n + 1
-            elif isinstance(c, AGe):
-                out["minItems"] = c.n
-            elif isinstance(c, AEq):
-                out["minItems"] = c.n
-                out["maxItems"] = c.n
-        return out
+        return _with_constraints(
+            {"type": "array", "items": to_json_schema_inner(schema.item)},
+            schema.constraints,
+        )
     if isinstance(schema, SOptional):
         return {
             "oneOf": [

@@ -32,16 +32,7 @@ with warnings.catch_warnings():
     import sre_parse
 
 from .ast import (
-    AEq,
-    AGe,
-    AGt,
-    ALe,
-    ALt,
-    NEq,
-    NGe,
-    NGt,
-    NLe,
-    NLt,
+    Comparison,
     SArray,
     Schema,
     SNumber,
@@ -50,11 +41,6 @@ from .ast import (
     SText,
     SUnion,
     TEnum,
-    TEq,
-    TGe,
-    TGt,
-    TLe,
-    TLt,
     TRegex,
 )
 
@@ -103,6 +89,29 @@ class VerifiedBounds:
     lt: int | None = None  # strict upper
 
 
+# op → (side, offset): every bound becomes an eq or a STRICT gt/lt bound
+# (``Le x → Lt x+1``, ``Ge x → Gt x-1`` — Verifier/Number.hs:6-11,
+# Verifier/Text.hs:11-16)
+_NORMALISED = {
+    "==": ("eq", 0),
+    ">": ("gt", 0),
+    ">=": ("gt", -1),
+    "<": ("lt", 0),
+    "<=": ("lt", 1),
+}
+
+
+def _normalised_bounds(constraints) -> tuple[list, list, list]:
+    """(eqs, strict lower bounds, strict upper bounds) of the
+    comparison constraints in ``constraints``."""
+    sides: dict[str, list[int]] = {"eq": [], "gt": [], "lt": []}
+    for c in constraints:
+        if isinstance(c, Comparison):
+            side, offset = _NORMALISED[c.op]
+            sides[side].append(c.n + offset)
+    return sides["eq"], sides["gt"], sides["lt"]
+
+
 def _verify_numberish(
     eqs: list[int], gts: list[int], lts: list[int], what: str
 ) -> VerifiedBounds:
@@ -120,19 +129,7 @@ def _verify_numberish(
 # ---------------------------------------------------------------------------
 
 def verify_number_constraints(constraints) -> VerifiedBounds:
-    eqs, gts, lts = [], [], []
-    for c in constraints:
-        if isinstance(c, NEq):
-            eqs.append(c.n)
-        elif isinstance(c, NGt):
-            gts.append(c.n)
-        elif isinstance(c, NGe):  # Ge x → Gt x-1
-            gts.append(c.n - 1)
-        elif isinstance(c, NLt):
-            lts.append(c.n)
-        elif isinstance(c, NLe):  # Le x → Lt x+1
-            lts.append(c.n + 1)
-    return _verify_numberish(eqs, gts, lts, "number")
+    return _verify_numberish(*_normalised_bounds(constraints), "number")
 
 
 # ---------------------------------------------------------------------------
@@ -212,19 +209,10 @@ class VerifiedText:
 
 
 def verify_text_constraints(constraints) -> VerifiedText:
-    eqs, gts, lts, enums, regexes = [], [], [], [], []
+    eqs, gts, lts = _normalised_bounds(constraints)
+    enums, regexes = [], []
     for c in constraints:
-        if isinstance(c, TEq):
-            eqs.append(c.n)
-        elif isinstance(c, TGt):
-            gts.append(c.n)
-        elif isinstance(c, TGe):
-            gts.append(c.n - 1)
-        elif isinstance(c, TLt):
-            lts.append(c.n)
-        elif isinstance(c, TLe):
-            lts.append(c.n + 1)
-        elif isinstance(c, TEnum):
+        if isinstance(c, TEnum):
             enums.extend(c.values)
         elif isinstance(c, TRegex):
             regexes.append(c.pattern)
@@ -255,19 +243,7 @@ def verify_text_constraints(constraints) -> VerifiedText:
 # ---------------------------------------------------------------------------
 
 def verify_array_constraints(constraints) -> VerifiedBounds:
-    eqs, gts, lts = [], [], []
-    for c in constraints:
-        if isinstance(c, AEq):
-            eqs.append(c.n)
-        elif isinstance(c, AGt):
-            gts.append(c.n)
-        elif isinstance(c, AGe):
-            gts.append(c.n - 1)
-        elif isinstance(c, ALt):
-            lts.append(c.n)
-        elif isinstance(c, ALe):
-            lts.append(c.n + 1)
-    return _verify_numberish(eqs, gts, lts, "array length")
+    return _verify_numberish(*_normalised_bounds(constraints), "array length")
 
 
 # ---------------------------------------------------------------------------

@@ -48,12 +48,11 @@ from ..schema.ast import SObject
 from ..schema.parser import dump_spec
 from ..validation import (
     VERDICT_COL,
+    VERDICTS,
     VIOLATIONS_COL,
     exploded_error_rows,
     validate,
 )
-
-_VERDICTS = ("Valid", "ValidationError", "DecodingError")
 
 #: per-wave bucket-count bound for the observe-fused metrics path: the
 #: fused pass declares 6 conditional aggregates per bucket up front
@@ -221,7 +220,7 @@ def run_validation_checkpointed(
         if fuse:
             exprs = []
             for b in wave:
-                for v in _VERDICTS:
+                for v in VERDICTS:
                     cond = (F.col("_bucket") == b) & (F.col(VERDICT_COL) == v)
                     exprs.append(
                         F.sum(cond.cast("long")).alias(f"__n_{b}_{v}"))
@@ -250,7 +249,7 @@ def run_validation_checkpointed(
                 {"bucket": b, "verdict": v,
                  "n_rows": m[f"__n_{b}_{v}"] or 0,
                  "n_violations": m[f"__v_{b}_{v}"] or 0}
-                for b in wave for v in _VERDICTS
+                for b in wave for v in VERDICTS
                 if (m[f"__n_{b}_{v}"] or 0) > 0
             ]
         else:

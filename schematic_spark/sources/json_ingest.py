@@ -34,7 +34,7 @@ import re as _re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StructField, StructType
 
 from ..compiler import VIOLATION_DDL, spark_type_for
 from ..schema.ast import (
@@ -56,6 +56,7 @@ from ..validation import (
     ValidationResult,
     as_schema,
     validate,
+    verdict_columns,
 )
 
 MALFORMED = "malformed json"
@@ -402,20 +403,14 @@ def validate_json_strings(
             F.col(STRUCTURAL_COL),
         ))
     )
+    verdict, decoding_error = verdict_columns(
+        F.col(STRUCTURAL_COL), F.col(VIOLATIONS_COL)
+    )
     ann = (
         ann
         .withColumn(STRUCTURAL_COL, structural)
-        .withColumn(
-            VERDICT_COL,
-            F.when(F.size(F.col(STRUCTURAL_COL)) > 0, F.lit("DecodingError"))
-            .when(F.size(F.col(VIOLATIONS_COL)) > 0,
-                  F.lit("ValidationError"))
-            .otherwise(F.lit("Valid")),
-        )
-        .withColumn(
-            DECODING_ERROR_COL,
-            F.try_element_at(F.col(STRUCTURAL_COL), F.lit(1))["error"],
-        )
+        .withColumn(VERDICT_COL, verdict)
+        .withColumn(DECODING_ERROR_COL, decoding_error)
         .drop("_malformed", "_null_errs", "_mismatch_errs")
     )
     return ValidationResult(annotated=ann, schema=schema)

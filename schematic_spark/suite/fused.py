@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..generator import non_monotonic_flag
-from ..validation import VERDICT_COL, VIOLATIONS_COL, validate
+from ..validation import VERDICT_COL, VERDICTS, VIOLATIONS_COL, validate
 from .drift import (
     DriftReport,
     _bucket_expr,
@@ -58,8 +58,6 @@ from .drift import (
 from .referential import dangling_rows
 from .stats import column_stat_aggs, column_stats_from_flat
 from .uniqueness import duplicate_keys_salted
-
-_VERDICTS = ("Valid", "ValidationError", "DecodingError")
 
 
 @dataclass
@@ -180,7 +178,7 @@ def run_fused_suite(
         exprs = [
             F.sum((F.col(VERDICT_COL) == v).cast("long"))
             .alias(f"__verdict_{v}")
-            for v in _VERDICTS
+            for v in VERDICTS
         ]
         exprs.append(F.sum(F.size(VIOLATIONS_COL)).alias("__n_violations"))
         exprs.append(
@@ -282,7 +280,7 @@ def run_fused_suite(
     )
     verdicts = {
         v: m1[f"__verdict_{v}"] or 0
-        for v in _VERDICTS
+        for v in VERDICTS
         if (m1[f"__verdict_{v}"] or 0) > 0
     }
     return FusedSuiteReport(

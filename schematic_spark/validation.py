@@ -34,7 +34,12 @@ from .compiler import (
     compile_structural,
     compile_violations,
 )
-from .schema.ast import SObject, Schema, render_path
+from .schema.ast import SObject, Schema
+from .schema.interpret import (
+    VERDICT_DECODING_ERROR,
+    VERDICT_VALID,
+    VERDICT_VALIDATION_ERROR,
+)
 from .schema.parser import parse_spec
 from .schema.verifier import verify_schema
 
@@ -42,6 +47,9 @@ VERDICT_COL = "_verdict"
 VIOLATIONS_COL = "_violations"
 STRUCTURAL_COL = "_structural"
 DECODING_ERROR_COL = "_decoding_error"
+
+#: every value ``_verdict`` can take (Validation.hs:30-34)
+VERDICTS = (VERDICT_VALID, VERDICT_VALIDATION_ERROR, VERDICT_DECODING_ERROR)
 
 
 def as_schema(spec: Schema | dict | str) -> Schema:
@@ -77,7 +85,7 @@ class ValidationResult:
         ]
         return (
             self.annotated
-            .where(F.col(VERDICT_COL) == "Valid")
+            .where(F.col(VERDICT_COL) == VERDICT_VALID)
             .select(*cols)
         )
 
@@ -121,7 +129,7 @@ class ValidationResult:
             .groupBy(F.spark_partition_id().alias("partition_id"))
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),
-                F.sum((F.col(VERDICT_COL) != "Valid").cast("long"))
+                F.sum((F.col(VERDICT_COL) != VERDICT_VALID).cast("long"))
                  .alias("n_bad_rows"),
                 F.sum(F.size(VIOLATIONS_COL)).alias("n_violations"),
                 F.sum(F.size(STRUCTURAL_COL)).alias("n_structural"),
@@ -154,6 +162,21 @@ def exploded_error_rows(
     )
 
 
+def verdict_columns(
+    structural: Column, violations: Column
+) -> tuple[Column, Column]:
+    """``(verdict, decoding_error)`` from the structural and violations
+    arrays: any structural error is a DecodingError carrying the first
+    message, else any violation is a ValidationError, else Valid."""
+    verdict = (
+        F.when(F.size(structural) > 0, F.lit(VERDICT_DECODING_ERROR))
+        .when(F.size(violations) > 0, F.lit(VERDICT_VALIDATION_ERROR))
+        .otherwise(F.lit(VERDICT_VALID))
+    )
+    # try_element_at: null (not ANSI error) on empty structural array
+    return verdict, F.try_element_at(structural, F.lit(1))["error"]
+
+
 def compile_verdict_columns(
     schema: SObject, row: Column | None = None
 ) -> dict[str, Column]:
@@ -177,13 +200,7 @@ def compile_verdict_columns(
     # NOT dedupe across HOF lambdas (CLAUDE.md). Callers needing more
     # than the verdict should materialize the array columns first and
     # derive the rest from the columns, as validate() does.
-    verdict = (
-        F.when(F.size(structural) > 0, F.lit("DecodingError"))
-        .when(F.size(violations) > 0, F.lit("ValidationError"))
-        .otherwise(F.lit("Valid"))
-    )
-    # try_element_at: null (not ANSI error) on empty structural array
-    decoding_error = F.try_element_at(structural, F.lit(1))["error"]
+    verdict, decoding_error = verdict_columns(structural, violations)
     return {
         STRUCTURAL_COL: structural,
         VIOLATIONS_COL: violations,
@@ -264,18 +281,13 @@ def validate(
         )
         .drop("_row_ok")
     )
+    verdict, decoding_error = verdict_columns(
+        F.col(STRUCTURAL_COL), F.col(VIOLATIONS_COL)
+    )
     annotated = (
         annotated
-        .withColumn(
-            VERDICT_COL,
-            F.when(F.size(F.col(STRUCTURAL_COL)) > 0, F.lit("DecodingError"))
-            .when(F.size(F.col(VIOLATIONS_COL)) > 0, F.lit("ValidationError"))
-            .otherwise(F.lit("Valid")),
-        )
-        .withColumn(
-            DECODING_ERROR_COL,
-            F.try_element_at(F.col(STRUCTURAL_COL), F.lit(1))["error"],
-        )
+        .withColumn(VERDICT_COL, verdict)
+        .withColumn(DECODING_ERROR_COL, decoding_error)
     )
     return ValidationResult(annotated=annotated, schema=schema)
 

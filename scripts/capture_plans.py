@@ -5,7 +5,8 @@ Usage: python scripts/capture_plans.py <out_dir> [query_substr ...] [--suffix _b
 Builds each query DataFrame (no collect — except queries whose builder
 itself runs jobs) and writes the formatted physical plan to
 <out_dir>/<name><suffix>.txt. Mirrors bench.py's session config so the
-plans match what the bench executes.
+plans match what the bench executes; SPARK_GRAFT_CPUS defaults to the
+host's CPU count.
 """
 from __future__ import annotations
 
@@ -30,7 +31,7 @@ def main():
     import __spark_entry__ as entry
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     spark = bench.build_spark(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 

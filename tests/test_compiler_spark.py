@@ -240,6 +240,26 @@ class TestF4RegexVectors:
             ".v", "must match (?i)hello",
         )
 
+    def test_python_dialect_under_objects(self, spark):
+        # the pandas-UDF fallback walks raw values: a null array element
+        # above the regex is the structural "expected Object" error and
+        # must not crash the interpreter walk; an optional object must
+        # not reach the UDF as one struct column
+        item = SObject((("t", SText((TRegex("^x", dialect="python"),))),))
+        schema = SObject((("a", SArray(item)), ("o", SOptional(item))))
+        df = spark.createDataFrame(
+            [([None, {"t": "y"}], None),
+             ([{"t": "xy"}, {"t": "y"}], {"t": "z"})],
+            "a array<struct<t:string>>, o struct<t:string>",
+        )
+        rows = validate(df, schema).annotated.collect()
+        assert [r["_verdict"] for r in rows] == [
+            "DecodingError", "ValidationError",
+        ]
+        assert rows[0]["_decoding_error"] == "expected Object"
+        assert [(v["path"], v["error"]) for v in rows[1]["_violations"]] \
+            == [(".a[1].t", "must match ^x"), (".o.t", "must match ^x")]
+
 
 class TestNestedSpans:
     """F6-shaped nested validation: array<struct<...>> via higher-order

@@ -26,7 +26,9 @@ from schematic_spark.compiler import spark_type_for
 from schematic_spark.schema.ast import (
     AEq,
     AGe,
+    AGt,
     ALe,
+    ALt,
     NEq,
     NGe,
     NGt,
@@ -45,6 +47,7 @@ from schematic_spark.schema.ast import (
     TGt,
     TLe,
     TLt,
+    TRegex,
 )
 from schematic_spark.schema.interpret import parse_and_validate
 from schematic_spark.validation import validate
@@ -60,6 +63,10 @@ def _rand_text_constraints(rng: random.Random) -> tuple:
         TLe(rng.randint(0, 8)), TGt(rng.randint(0, 4)),
         TGe(rng.randint(0, 4)),
         TEnum(tuple(rng.sample(["a", "bb", "ccc", "dddd", ""], 2))),
+        # valid in both Java regex and Python re: the JVM rlike path and
+        # the pandas-UDF interpreter path must agree with the oracle
+        TRegex("[bc]{2}", dialect="java"),
+        TRegex("^(a|d+)$", dialect="python"),
     ]
     return tuple(rng.sample(pool, rng.randint(0, 2)))
 
@@ -74,7 +81,8 @@ def _rand_number_constraints(rng: random.Random) -> tuple:
 
 
 def _rand_array_constraints(rng: random.Random) -> tuple:
-    pool = [AEq(rng.randint(0, 3)), AGe(rng.randint(0, 2)),
+    pool = [AEq(rng.randint(0, 3)), AGt(rng.randint(0, 2)),
+            AGe(rng.randint(0, 2)), ALt(rng.randint(1, 4)),
             ALe(rng.randint(1, 4))]
     return tuple(rng.sample(pool, rng.randint(0, 2)))
 
@@ -152,25 +160,61 @@ def _interp_expect(schema: SObject, value: dict):
     return parse_and_validate(schema, _typed_view(value))
 
 
-@pytest.mark.parametrize("seed", [11, 23, 37, 59])
-def test_compiler_matches_interpreter(spark, seed):
+def _draw_top_schema(rng: random.Random) -> SObject:
+    """A top-level object whose fields exercise nesting up to depth 3;
+    redrawn when the random constraints are contradictory (the verifier
+    pre-flight rejecting those is tested elsewhere)."""
     from schematic_spark.schema.verifier import (
         UnsatisfiableSchema, verify_schema,
     )
 
-    rng = random.Random(seed)
-    # a top-level object whose fields exercise nesting up to depth 3;
-    # redraw when the random constraints are contradictory (the
-    # verifier pre-flight rejecting those is tested elsewhere)
     while True:
         schema = SObject(tuple(
             (f"c{i}", _rand_schema(rng, 3)) for i in range(3)
         ))
         try:
             verify_schema(schema)
-            break
+            return schema
         except UnsatisfiableSchema:
             continue
+
+
+# 163 and 280 add the constraint kinds the first four seeds never draw
+SEEDS = [11, 23, 37, 59, 163, 280]
+
+
+def _constraint_kinds(schema: Schema, out: set) -> set:
+    for c in getattr(schema, "constraints", ()):
+        out.add(type(c).__name__
+                + (f":{c.dialect}" if isinstance(c, TRegex) else ""))
+    if isinstance(schema, SArray):
+        _constraint_kinds(schema.item, out)
+    elif isinstance(schema, SOptional):
+        _constraint_kinds(schema.inner, out)
+    elif isinstance(schema, SObject):
+        for _, s in schema.fields:
+            _constraint_kinds(s, out)
+    return out
+
+
+def test_fixed_seeds_cover_every_constraint_kind():
+    """The tier-1 seeds draw all 15 comparisons, TEnum and TRegex on
+    both the JVM and the Python-dialect path."""
+    kinds: set = set()
+    for seed in SEEDS:
+        _constraint_kinds(_draw_top_schema(random.Random(seed)), kinds)
+    assert kinds == {
+        "TEq", "TLt", "TLe", "TGt", "TGe", "TEnum",
+        "TRegex:java", "TRegex:python",
+        "NEq", "NGt", "NGe", "NLt", "NLe",
+        "AEq", "AGt", "AGe", "ALt", "ALe",
+    }
+
+
+@pytest.mark.parametrize("seed", SEEDS)
+def test_compiler_matches_interpreter(spark, seed):
+    rng = random.Random(seed)
+    schema = _draw_top_schema(rng)
     st = spark_type_for(schema)
     rows = []
     for i in range(40):

@@ -528,3 +528,38 @@ class TestDraft4IndependentValidator:
             errs = list(v.iter_errors(row))
             assert errs == [], f"draft-4 rejects generated row {row}: {errs}"
             assert parse_and_validate(schema, row).violations == []
+
+    def test_export_accepts_exactly_what_the_engine_accepts(self):
+        """Boundary sweep: every comparison kind at measures n-1, n, n+1,
+        plus one regex+enum field — the draft-4 export and the engine
+        must agree on every document. The one exception is the
+        reference-parity clamp (JsonSchema.hs:35-37): ``TLt 0``/``ALt 0``
+        export ``max… = 0``, which admits the empty string/array that
+        the engine rejects."""
+        jsonschema = pytest.importorskip("jsonschema")
+        families = [
+            ((TEq, TLt, TLe, TGt, TGe), SText, lambda m: "x" * m),
+            ((NEq, NLt, NLe, NGt, NGe), SNumber, lambda m: m),
+            ((AEq, ALt, ALe, AGt, AGe), lambda cs: SArray(SNumber(), cs),
+             lambda m: [1] * m),
+        ]
+        cases = []
+        for kinds, node, make in families:
+            for kind in kinds:
+                for n in (0, 2):
+                    for m in (n - 1, n, n + 1):
+                        if m >= 0 or node is SNumber:
+                            cases.append((kind(n), node((kind(n),)), make(m)))
+        pattern_enum = SText((TRegex("[0-9]+"), TEnum(("a1", "b", "22"))))
+        for text in ("a1", "22", "b", "x9", ""):
+            cases.append(("regex+enum", pattern_enum, text))
+        mismatches = set()
+        for label, node, value in cases:
+            schema = SObject((("f", node),))
+            doc = {"f": value}
+            exported = jsonschema.Draft4Validator(to_json_schema(schema))
+            engine_ok = parse_and_validate(schema, doc).is_valid
+            if exported.is_valid(doc) != engine_ok:
+                mismatches.add((label, repr(value)))
+        assert len(cases) == 85
+        assert mismatches == {(TLt(0), "''"), (ALt(0), "[]")}
