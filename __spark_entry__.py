@@ -766,10 +766,13 @@ def _q_winnow_fingerprints_documents(spark, sf_dir):
     # md5 k-gram chain AFTER the range exchange, which AQE coalesces to
     # ~1 partition for a KB-scale table — the whole hash chain ran on
     # one core. Now: spread the scan (no-op at 100 TB file counts),
-    # fingerprint in parallel, materialize the tiny per-doc rows
-    # (localCheckpoint) so the final orderBy's range-sampling pass
-    # samples 3-column rows instead of re-executing the md5 chain, and
-    # sort LAST. Output rows and doc_id ordering are identical.
+    # fingerprint in parallel, then shuffle the tiny 3-column per-doc
+    # rows to ONE partition and sort them there: a global orderBy's
+    # range-sampling pass would re-execute the md5 chain, and
+    # materializing the rows first (localCheckpoint, even with
+    # eager=False — AQE runs the spread's shuffle stage when the
+    # checkpoint plan is executed) would run jobs while the query is
+    # only being built.
     from schematic_spark.sources import spread_for_compute
 
     docs = spread_for_compute(_read(spark, sf_dir, "documents"))
@@ -784,8 +787,8 @@ def _q_winnow_fingerprints_documents(spark, sf_dir):
                 lambda a, x: a.bitwiseXOR(x),
             ),
         ).alias("fp_xor_hex"),
-    ).localCheckpoint()
-    return out.orderBy("doc_id")
+    )
+    return out.repartition(1).sortWithinPartitions("doc_id")
 
 
 def _q_shared_passages_documents(spark, sf_dir):

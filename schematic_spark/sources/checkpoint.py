@@ -7,13 +7,21 @@ Model: a validation *run* processes a table in key-range partitions
 (``bucket = pmod(xxhash64(doc_id), n_buckets)``). A run handles ALL
 pending buckets in a constant number of passes (NOT one scan per
 bucket — the round-1 design rescanned the input n_buckets times, which
-is thousands of full scans at 100 TB):
+is thousands of full scans at 100 TB). ``validate()`` is built ONCE per
+run; each commit wave filters that annotated frame on its buckets
+(Catalyst pushes the ``_bucket`` filter below the validation
+projection, so a wave's plan is the same as validating the pre-filtered
+input). A wave then runs exactly three Spark jobs:
 
-  1. one scan writes the violation rows for every pending bucket
-     (bucket id is a column, so downstream pruning works);
-  2. one scan aggregates per-(bucket, verdict) metrics — a tiny
-     hash-agg result collected to the driver;
-  3. one lineage append marks the processed buckets complete.
+  1. one scan writes the violation rows for the wave's buckets (bucket
+     id is a column, so downstream pruning works); the per-(bucket,
+     verdict) metrics ride that same scan via ``observe``;
+  2. one metrics append;
+  3. one lineage append marks the wave's buckets complete.
+
+The metrics and lineage rows are a dozen driver-side rows: each append
+is ONE Arrow batch, decoded in the JVM and written by one task as one
+file — no Python worker, no shuffle.
 
 **Idempotency / atomicity** (commit protocol): every invocation gets a
 fresh ``attempt_id``; violations and metrics rows carry it, and the
@@ -39,8 +47,11 @@ import json
 import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
 from .table_format import TableFormat
@@ -64,6 +75,23 @@ _FUSE_MAX_BUCKETS = 64
 LINEAGE_TABLE = "_schematic_lineage"
 METRICS_TABLE = "_schematic_metrics"
 VIOLATIONS_TABLE = "_schematic_violations"
+
+
+def _row_schema(**types) -> StructType:
+    """Columns in alphabetical order, all nullable — the shape schema
+    inference gave these tables when rows were appended as dicts, so
+    existing tables keep one schema across old and new appends."""
+    return StructType([StructField(k, types[k](), True)
+                       for k in sorted(types)])
+
+
+_RUN_KEYS = dict(attempt_id=StringType, bucket=LongType,
+                 input_snapshot=StringType, n_buckets=LongType,
+                 run_id=StringType, spec_fp=StringType)
+METRICS_SCHEMA = _row_schema(**_RUN_KEYS, verdict=StringType,
+                             n_rows=LongType, n_violations=LongType)
+LINEAGE_SCHEMA = _row_schema(**_RUN_KEYS, status=StringType,
+                             n_rows=LongType)
 
 
 def spec_fingerprint(schema: SObject) -> str:
@@ -163,7 +191,9 @@ def run_validation_checkpointed(
 
     bucket_col = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)) \
         .cast("int")
-    part = df.withColumn("_bucket", bucket_col)
+    # built once per run: every wave filters this annotated frame
+    annotated = validate(df.withColumn("_bucket", bucket_col),
+                         schema).annotated
 
     run_cols = {
         "run_id": F.lit(run_id),
@@ -191,13 +221,12 @@ def run_validation_checkpointed(
     totals: dict[str, int] = {}
     for wave in waves:
         if len(waves) == 1 and not done:
-            wpart = part  # everything pending: no filter needed
+            wann = annotated  # everything pending: no filter needed
         elif len(waves) == 1:
             # prune committed buckets in the scan filter
-            wpart = part.where(~F.col("_bucket").isin(*sorted(done)))
+            wann = annotated.where(~F.col("_bucket").isin(*sorted(done)))
         else:
-            wpart = part.where(F.col("_bucket").isin(*wave))
-        res = validate(wpart, schema)
+            wann = annotated.where(F.col("_bucket").isin(*wave))
 
         # passes 1+2 fused (r6): the per-(bucket, verdict) metrics ride
         # the violations write via ``observe`` (CollectMetrics — the
@@ -216,7 +245,7 @@ def run_validation_checkpointed(
         wave_bounded = bool(commit_every and commit_every > 0)
         fuse = len(wave) <= _FUSE_MAX_BUCKETS
         obs = Observation()
-        ann = res.annotated
+        ann = wann
         if fuse:
             exprs = []
             for b in wave:
@@ -229,7 +258,7 @@ def run_validation_checkpointed(
                         .alias(f"__v_{b}_{v}"))
             ann = ann.observe(obs, *exprs)
         elif wave_bounded:
-            res.annotated.persist(StorageLevel.MEMORY_AND_DISK)
+            wann.persist(StorageLevel.MEMORY_AND_DISK)
 
         # pass 1: violations for the wave's buckets — ONE append, one
         # scan, bucket-partitioned files so bucket filters prune at the
@@ -254,7 +283,7 @@ def run_validation_checkpointed(
             ]
         else:
             agg = (
-                res.annotated
+                wann
                 .groupBy(F.col("_bucket").alias("bucket"),
                          F.col(VERDICT_COL).alias("verdict"))
                 .agg(
@@ -264,7 +293,7 @@ def run_validation_checkpointed(
                 .collect()
             )
             if wave_bounded:
-                res.annotated.unpersist()
+                wann.unpersist()
         metrics_rows = [
             {
                 **meta,
@@ -285,20 +314,8 @@ def run_validation_checkpointed(
              "n_rows": 0, "n_violations": 0}
             for b in wave if b not in seen_buckets
         ]
-        # repartition(1): createDataFrame slices a dozen local rows
-        # across defaultParallelism partitions, so an unpartitioned
-        # append wrote ~32 near-empty part-files per wave per table —
-        # which every resume/lineage/passfail read then re-lists and
-        # re-opens (guide §6 small-files tax). repartition, NOT
-        # coalesce: coalesce(1) makes ONE task evaluate all 32 pickled
-        # python partitions sequentially (~4 s/write measured);
-        # repartition evaluates them in parallel and shuffles a dozen
-        # rows to the single writer (0.4 s, one output file).
-        if metrics_rows:
-            fmt.write(
-                spark.createDataFrame(metrics_rows).repartition(1),
-                METRICS_TABLE, mode="append",
-            )
+        fmt.write(_rows_frame(spark, metrics_rows, METRICS_SCHEMA),
+                  METRICS_TABLE, mode="append")
 
         # pass 3 (commit point): lineage rows for the wave's buckets —
         # buckets with zero rows are complete too
@@ -317,7 +334,7 @@ def run_validation_checkpointed(
             }
             for b in wave
         ]
-        fmt.write(spark.createDataFrame(lineage_rows).repartition(1),
+        fmt.write(_rows_frame(spark, lineage_rows, LINEAGE_SCHEMA),
                   LINEAGE_TABLE, mode="append")
 
     return {
@@ -328,6 +345,21 @@ def run_validation_checkpointed(
         "skipped_buckets": sorted(done),
         "totals": totals,
     }
+
+
+def _rows_frame(spark: SparkSession, rows: list[dict],
+                schema: StructType) -> DataFrame:
+    """A few driver-side rows as ONE Arrow batch, decoded in the JVM
+    into a local relation, so the append needs no Python worker and no
+    shuffle. Spark scans a local relation in one partition per row (up
+    to ``defaultParallelism``); ``coalesce(1)`` over rows already in the
+    JVM is free and makes the append one task writing one file. (Over
+    ``createDataFrame(list)`` the same coalesce makes one task unpickle
+    every Python partition in turn, and ``repartition(1)`` costs a
+    shuffle.)"""
+    return spark.createDataFrame(
+        pa.Table.from_pylist(rows, schema=to_arrow_schema(schema)), schema
+    ).coalesce(1)
 
 
 def _committed_pairs(spark: SparkSession, fmt: TableFormat) -> DataFrame:

@@ -58,6 +58,16 @@ class TableFormat:
         raise NotImplementedError
 
     def write(self, df, table, mode="overwrite", partition_by=None) -> str:
+        """Write ``df`` as a new snapshot of ``table``; return its id.
+
+        Contract: ``write`` runs exactly ONE Spark action over ``df``.
+        An ``append`` to a table that does not exist yet falls back to
+        ``create``, and the failed append runs no action before it. The
+        checkpoint layer depends on this: its per-wave metrics ride the
+        violations write via ``observe``, which is filled once by the
+        first action over ``df`` — a second action would re-run the
+        whole validation, and a read of the observation before any
+        action would block."""
         raise NotImplementedError
 
     def snapshots(self, spark, table) -> list[dict]:
@@ -197,19 +207,35 @@ class ParquetDirFormat(TableFormat):
             return spark.createDataFrame(
                 [], StructType.fromJson(json.loads(schema_json))
             )
-        if len(paths) == 1:
-            return spark.read.parquet(paths[0])
         # multiple snapshot roots: Spark refuses to merge several
         # hive-partitioned roots in one call (CONFLICTING_DIRECTORY_
         # STRUCTURES) — read each root and union (schemas may differ by
         # layout: partition columns land at the end)
+        entries = {e["snapshot_id"]: e for e in manifest}
         out = None
         for p in paths:
-            d = spark.read.parquet(p)
+            d = self._read_dir(spark, p, entries)
             out = d if out is None else out.unionByName(
                 d, allowMissingColumns=True
             )
         return out
+
+    @staticmethod
+    def _read_dir(spark, path: str, entries: dict) -> DataFrame:
+        """One ``snap-<id>`` dir, read with the schema its own write
+        recorded: parquet schema inference costs a Spark job per dir.
+        Partition columns go last, where inference puts them. A dir
+        whose entry recorded no schema falls back to inference."""
+        entry = entries.get(os.path.basename(path).removeprefix("snap-"))
+        if not entry or not entry.get("schema"):
+            return spark.read.parquet(path)
+        schema = StructType.fromJson(json.loads(entry["schema"]))
+        parts = entry.get("partition_by") or []
+        schema = StructType(
+            [f for f in schema if f.name not in parts]
+            + [schema[c] for c in parts]
+        )
+        return spark.read.schema(schema).parquet(path)
 
     def write(self, df, table, mode="overwrite", partition_by=None) -> str:
         # uuid4: concurrent writers land in DISTINCT dirs — a

@@ -478,25 +478,11 @@ class TestCheckpointWaves:
     """Round 3: per-wave lineage commits (commit_every) + one-attempt-
     per-bucket read dedupe (concurrent double-commit, ADVICE r2)."""
 
-    def _fixture(self, spark, tmp_path):
-        from schematic_spark.sources import ParquetDirFormat
-
-        fmt = ParquetDirFormat(root=str(tmp_path))
-        df = spark.createDataFrame(
-            [(f"d{i}", [13.0] if i % 10 else [3.0]) for i in range(100)],
-            "doc_id string, foo array<double>",
-        )
-        schema = SObject((
-            ("doc_id", SText()),
-            ("foo", SArray(SNumber((NGt(10),)), (AEq(1),))),
-        ))
-        return fmt, df, schema
-
     def test_kill_mid_run_resumes_from_partial_waves(self, spark, tmp_path):
         from schematic_spark.sources import read_violations
         from schematic_spark.sources.checkpoint import LINEAGE_TABLE
 
-        fmt, df, schema = self._fixture(spark, tmp_path)
+        fmt, df, schema = _checkpoint_fixture(spark, tmp_path)
 
         # fail the 5th write: wave 1 (buckets 0-1) fully commits (writes
         # 1-3: violations, metrics, lineage), wave 2 dies after its
@@ -553,7 +539,7 @@ class TestCheckpointWaves:
     ):
         from schematic_spark.sources import read_violations
 
-        fmt, df, schema = self._fixture(spark, tmp_path)
+        fmt, df, schema = _checkpoint_fixture(spark, tmp_path)
         # two runs race on the same pending buckets; both commit
         run_validation_checkpointed(
             spark, df, schema, fmt, n_buckets=2, run_id="a",
@@ -694,3 +680,207 @@ class TestCheckpointEdgeCases:
         fmt_a.write(spark.range(0, 5), "t", mode="append")
         fmt_b.write(spark.range(5, 9), "t", mode="append")
         assert fmt_a.read(spark, "t").count() == 9
+
+
+def _jobs_during(spark, fn):
+    """(fn(), number of Spark jobs submitted while it ran)."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    job0 = dag.nextJobId()
+    out = fn()
+    return out, dag.nextJobId() - job0
+
+
+def _checkpoint_fixture(spark, tmp_path):
+    fmt = ParquetDirFormat(root=str(tmp_path))
+    df = spark.createDataFrame(
+        [(f"d{i}", [13.0] if i % 10 else [3.0]) for i in range(100)],
+        "doc_id string, foo array<double>",
+    )
+    schema = SObject((
+        ("doc_id", SText()),
+        ("foo", SArray(SNumber((NGt(10),)), (AEq(1),))),
+    ))
+    return fmt, df, schema
+
+
+def _parquet_files_per_snapshot(root, table) -> list[int]:
+    import glob
+    import os
+
+    snaps = sorted(glob.glob(os.path.join(str(root), table, "snap-*")))
+    return [
+        len(glob.glob(os.path.join(s, "**", "*.parquet"), recursive=True))
+        for s in snaps
+    ]
+
+
+class TestCheckpointJobBudget:
+    """A checkpointed wave runs exactly three Spark jobs (violations
+    write with the metrics observed on it, one metrics append, one
+    lineage append); a resume only groups the lineage table; reading
+    a table back with its recorded schemas runs none."""
+
+    @pytest.mark.parametrize("commit_every,n_waves", [(None, 1), (2, 2),
+                                                      (1, 4)])
+    def test_fresh_run_is_three_jobs_per_wave(
+        self, spark, tmp_path, commit_every, n_waves
+    ):
+        fmt, df, schema = _checkpoint_fixture(spark, tmp_path)
+        res, jobs = _jobs_during(spark, lambda: run_validation_checkpointed(
+            spark, df, schema, fmt, n_buckets=4, run_id="jb",
+            input_snapshot="s", commit_every=commit_every,
+        ))
+        assert sorted(res["processed_buckets"]) == [0, 1, 2, 3]
+        assert jobs == 3 * n_waves
+
+    def test_resume_and_reads_job_budget(self, spark, tmp_path):
+        from schematic_spark.sources import read_violations
+        from schematic_spark.sources.checkpoint import (
+            LINEAGE_TABLE, METRICS_TABLE, VIOLATIONS_TABLE,
+        )
+
+        fmt, df, schema = _checkpoint_fixture(spark, tmp_path)
+
+        def run():
+            return run_validation_checkpointed(
+                spark, df, schema, fmt, n_buckets=4, run_id="jb",
+                input_snapshot="s", commit_every=2,
+            )
+
+        run()
+        res, jobs = _jobs_during(spark, run)
+        assert res["processed_buckets"] == []
+        assert jobs <= 2
+
+        # every table now spans two snapshot dirs; reading it back (and
+        # building the committed-attempt readers over it) runs no job
+        for t in (LINEAGE_TABLE, METRICS_TABLE, VIOLATIONS_TABLE):
+            assert len(fmt.snapshots(spark, t)[-1]["dirs"]) == 2
+            _, jobs = _jobs_during(spark, lambda t=t: fmt.read(spark, t))
+            assert jobs == 0, t
+        _, jobs = _jobs_during(spark, lambda: (
+            read_violations(spark, fmt), partition_passfail(spark, fmt)))
+        assert jobs == 0
+
+    def test_each_metadata_append_writes_one_file(self, spark, tmp_path):
+        from schematic_spark.sources.checkpoint import (
+            LINEAGE_TABLE, METRICS_TABLE,
+        )
+
+        fmt, df, schema = _checkpoint_fixture(spark, tmp_path)
+        run_validation_checkpointed(
+            spark, df, schema, fmt, n_buckets=4, run_id="jb",
+            input_snapshot="s", commit_every=1,
+        )
+        for t in (LINEAGE_TABLE, METRICS_TABLE):
+            assert _parquet_files_per_snapshot(tmp_path, t) == [1] * 4, t
+
+
+class TestCheckpointReadCompat:
+    """Reading snapshot dirs with their recorded schemas must give the
+    tables exactly the shape parquet schema inference gave them."""
+
+    # column order and types as inference read them before the
+    # recorded schemas were used
+    PINNED = {
+        "_schematic_metrics":
+            "struct<attempt_id:string,bucket:bigint,input_snapshot:string,"
+            "n_buckets:bigint,n_rows:bigint,n_violations:bigint,"
+            "run_id:string,spec_fp:string,verdict:string>",
+        "_schematic_lineage":
+            "struct<attempt_id:string,bucket:bigint,input_snapshot:string,"
+            "n_buckets:bigint,n_rows:bigint,run_id:string,spec_fp:string,"
+            "status:string>",
+        "_schematic_violations":
+            "struct<doc_id:string,json_path:string,error:string,"
+            "run_id:string,attempt_id:string,input_snapshot:string,"
+            "spec_fp:string,n_buckets:int,bucket:int>",
+        "read_violations":
+            "struct<input_snapshot:string,spec_fp:string,n_buckets:int,"
+            "bucket:int,attempt_id:string,doc_id:string,json_path:string,"
+            "error:string,run_id:string>",
+        "partition_passfail":
+            "struct<run_id:string,input_snapshot:string,spec_fp:string,"
+            "n_buckets:bigint,bucket:bigint,n_rows:bigint,n_bad_rows:bigint,"
+            "n_violations:bigint,passed:boolean>",
+    }
+
+    def test_table_schemas_pinned(self, spark, tmp_path):
+        from schematic_spark.sources import read_violations
+
+        fmt, df, schema = _checkpoint_fixture(spark, tmp_path)
+        run_validation_checkpointed(
+            spark, df, schema, fmt, n_buckets=4, run_id="jb",
+            input_snapshot="s", commit_every=2,
+        )
+        got = {t: fmt.read(spark, t).schema.simpleString()
+               for t in list(self.PINNED)[:3]}
+        got["read_violations"] = \
+            read_violations(spark, fmt).schema.simpleString()
+        got["partition_passfail"] = \
+            partition_passfail(spark, fmt).schema.simpleString()
+        assert got == self.PINNED
+        # all nullable, as inference reads parquet
+        assert all(f.nullable for t in list(self.PINNED)[:3]
+                   for f in fmt.read(spark, t).schema)
+
+    def test_row_schemas_equal_dict_inference(self, spark):
+        """Tables written by older appends (rows as dicts, schema
+        inferred) and by the Arrow appends share one schema."""
+        from schematic_spark.sources.checkpoint import (
+            LINEAGE_SCHEMA, METRICS_SCHEMA,
+        )
+
+        meta = {"run_id": "r", "attempt_id": "a", "input_snapshot": "s",
+                "spec_fp": "f", "n_buckets": 4, "bucket": 1}
+        metrics = {**meta, "verdict": "Valid", "n_rows": 3,
+                   "n_violations": 0}
+        lineage = {**meta, "status": "complete", "n_rows": 3}
+        assert spark.createDataFrame([metrics]).schema == METRICS_SCHEMA
+        assert spark.createDataFrame([lineage]).schema == LINEAGE_SCHEMA
+
+    @pytest.mark.parametrize("partition_by", [None, ["p"]])
+    def test_added_column_reads_like_inferred_union(
+        self, spark, tmp_path, partition_by
+    ):
+        import os
+
+        fmt = ParquetDirFormat(root=str(tmp_path))
+        first = spark.createDataFrame([(1, 0, "x")], "a long, p int, b string")
+        later = spark.createDataFrame(
+            [(2, 1, "y", 2.5)], "a long, p int, b string, c double")
+        fmt.write(first, "t", mode="append", partition_by=partition_by)
+        fmt.write(later, "t", mode="append", partition_by=partition_by)
+
+        dirs = [os.path.join(str(tmp_path), "t", d)
+                for d in fmt.snapshots(spark, "t")[-1]["dirs"]]
+        inferred = spark.read.parquet(dirs[0]).unionByName(
+            spark.read.parquet(dirs[1]), allowMissingColumns=True)
+        got = fmt.read(spark, "t")
+        assert got.schema == inferred.schema
+        assert sorted(got.collect()) == sorted(inferred.collect())
+
+    def test_entry_without_schema_reads_through_inference(
+        self, spark, tmp_path
+    ):
+        import json
+
+        fmt = ParquetDirFormat(root=str(tmp_path))
+        fmt.write(spark.range(3).selectExpr("id", "id * 2 AS v"), "t",
+                  mode="append")
+        fmt.write(spark.range(3, 5).selectExpr("id", "id * 2 AS v"), "t",
+                  mode="append")
+        want = fmt.read(spark, "t")
+        want_rows = sorted(want.collect())
+
+        # a manifest written before entries recorded their schema
+        path = tmp_path / "t" / "_snapshots.json"
+        manifest = json.loads(path.read_text())
+        for e in manifest:
+            del e["schema"]
+        path.write_text(json.dumps(manifest))
+
+        legacy, jobs = _jobs_during(spark, lambda: fmt.read(spark, "t"))
+        assert jobs > 0  # one inference job per snapshot dir
+        assert legacy.schema == want.schema
+        assert sorted(legacy.collect()) == want_rows

@@ -159,6 +159,22 @@ class TestPlanShapeRound3:
         assert "Exchange" not in plan, plan
         assert "Python" not in plan, plan
 
+    def test_winnow_query_build_runs_no_job(self, spark, monkeypatch):
+        """Building the winnow leaf must not run its md5 pipeline (or
+        any other job): every job waits for the caller's action. The
+        input frame is read before counting — parquet schema inference
+        is the one job every ``spark.read.parquet`` leaf pays."""
+        import __spark_entry__ as entry
+
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        monkeypatch.setattr(entry, "_read", lambda *_: docs)
+        dag = spark.sparkContext._jsc.sc().dagScheduler()
+        job0 = dag.nextJobId()
+        q = entry.queries()["winnow_fingerprints_documents"](spark, SF_DIR)
+        assert dag.nextJobId() == job0
+        ids = [r["doc_id"] for r in q.collect()]
+        assert ids == sorted(ids) and len(ids) == docs.count()
+
     def test_tagged_union_validation_is_shuffle_free(self, spark):
         """Kind-tagged union validation (the north-rule span shape) is a
         row-local projection: no Exchange, no Python UDF."""
@@ -290,6 +306,43 @@ class TestPartitionPruning:
         assert any("lang" in ln for ln in pf), plan
         # the residual data filter must NOT re-check lang row-by-row
         assert rd.count() == docs.where(F.col("lang") == "en").count()
+
+
+class TestCheckpointWavePlan:
+    def test_wave_filter_sits_below_once_built_validation(self, spark):
+        """A checkpointed run builds ``validate()`` once and each wave
+        filters the annotated frame on ``_bucket``. Catalyst must push
+        that filter below the violation trees: the wave's violations
+        frame has the same optimized plan as validating the
+        pre-filtered input."""
+        import re
+
+        from schematic_spark.validation import (
+            VIOLATIONS_COL, exploded_error_rows,
+        )
+
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        part = docs.withColumn(
+            "_bucket",
+            F.pmod(F.xxhash64(F.col("doc_id")), F.lit(4)).cast("int"),
+        )
+        in_wave = F.col("_bucket").isin(1, 3)
+
+        def plan(ann):
+            rows = exploded_error_rows(ann, VIOLATIONS_COL, "doc_id",
+                                       "_bucket")
+            text = rows._jdf.queryExecution().optimizedPlan().toString()
+            return re.sub(r"#\d+", "", text)
+
+        once = plan(validate(part, SPEC).annotated.where(in_wave))
+        per_wave = plan(validate(part.where(in_wave), SPEC).annotated)
+        assert once == per_wave
+        # parents print first: the bucket filter sits on the scan,
+        # below the projection that builds the violation arrays
+        *_, bucket_filter, scan = once.splitlines()
+        assert "Filter" in bucket_filter and "xxhash64" in bucket_filter, \
+            once
+        assert "Relation" in scan, once
 
 
 class TestClusteredLayout:
