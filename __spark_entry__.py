@@ -647,9 +647,7 @@ def _q_simhash_documents(spark, sf_dir):
     from schematic_spark.functions import simhash_near_duplicates
 
     docs = _read(spark, sf_dir, "documents")
-    pairs = simhash_near_duplicates(
-        docs, "text", "doc_id", max_hamming=1, catalyst=True
-    )
+    pairs = simhash_near_duplicates(docs, "text", "doc_id", max_hamming=1)
     return pairs.groupBy("hamming").agg(
         F.count(F.lit(1)).alias("n_pairs")
     )
@@ -1082,9 +1080,9 @@ def _q_contamination_src0(spark, sf_dir):
     times across both sides are dropped explicitly — in-plan via a
     window count riding the single gram exchange (the shared_passages
     pattern; r4 VERDICT #5 one-exchange shape). The oracle applies the
-    identical cap over the identical universe (non-NULL sources);
-    log_dropped stays off here because the telemetry job would re-scan
-    both gram sets purely for a counter."""
+    identical cap over the identical universe (non-NULL sources). How
+    many grams the cap drops is not reported: counting them here would
+    re-scan both gram sets in a job of its own."""
     from schematic_spark.functions import ngram_contamination
 
     docs = _read(spark, sf_dir, "documents")

@@ -13,7 +13,6 @@ from .dedup import (  # noqa: F401
     shingles,
     shingles_from_tokens,
     tokens_column,
-    simhash,
     simhash_catalyst,
     simhash_catalyst_from_tokens,
     simhash_near_duplicates,

@@ -20,6 +20,10 @@ layered exactly like the reference:
   value → ``expected Null``. Optional fields keep the collapsed
   missing/null semantics (Schema.hs:561-563).
 
+Both raw-JSON entry points — :func:`validate_json_strings` and
+``migrations.validate_versioned_json_strings`` — decode through
+:func:`decode_json`, the one place these rules are written.
+
 Documented leniencies (both directions of the Jackson parser, shared
 with the versioned entry point): JSON numbers COERCE into text fields
 ("5" for 5 — from_json StringType captures any scalar), and a
@@ -31,8 +35,10 @@ missing-field instead of expected-Kind, an optional one parses None).
 from __future__ import annotations
 
 import re as _re
+from dataclasses import dataclass
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
@@ -182,7 +188,7 @@ def check_raw_union_support(schema: SObject) -> None:
             )
 
 
-def with_raw_tokens(df: DataFrame, json_col: str, names) -> DataFrame:
+def _with_raw_tokens(df: DataFrame, json_col: str, names) -> DataFrame:
     """Add one ``_raw__<name>`` string column per top-level field name:
     the field's raw JSON token text, NULL for a missing key, a literal
     ``null`` value, or a malformed document. One ``json_tuple`` parse
@@ -206,23 +212,7 @@ def with_raw_tokens(df: DataFrame, json_col: str, names) -> DataFrame:
     return df
 
 
-def _raw_union_col(variant_col, kind_col, name: str, union: SUnion):
-    """struct<alt_i…> for a top-level union field decoded from the
-    variant: branch i holds the payload iff the JSON kind matches
-    alternative i (kinds are distinct, so at most one branch fires)."""
-    alts = []
-    for i, alt in enumerate(union.alternatives):
-        ddl = spark_type_for(alt).simpleString()
-        alts.append(
-            F.when(
-                _variant_kind_pred(alt, kind_col),
-                F.try_variant_get(variant_col, _json_path(name), ddl),
-            ).alias(f"alt_{i}")
-        )
-    return F.struct(*alts)
-
-
-def is_variant_union(fs) -> bool:
+def _is_variant_union(fs) -> bool:
     """True for fields that must decode via the variant kind dispatch:
     a default-encoding (no ``branch_fields``, no ``tag_field``) union,
     possibly Optional-wrapped. Named unions ride ``from_json``; a
@@ -237,15 +227,23 @@ def is_variant_union(fs) -> bool:
     )
 
 
-def variant_union_carrier(variant_col, kind_col, name: str, fs):
-    """The ``alt_i`` struct carrier for one variant-decoded union
-    field, including the SOptional wrap (missing key → kind NULL,
-    explicit null → VOID; both become None). The ONE place the subtle
-    kind-dispatch leniencies live — shared by ``validate_json_strings``
-    and ``migrations.validate_versioned_json_strings`` so a fix in one
-    path cannot silently miss the other."""
+def _union_carrier(variant_col, kind_col, name: str, fs):
+    """The ``alt_i`` struct carrier of one variant-decoded union field:
+    branch i holds the payload iff the JSON kind matches alternative i
+    (kinds are distinct, so at most one branch fires). An SOptional
+    wrap maps a missing key (kind NULL) and an explicit null (VOID) to
+    None."""
     union = fs.inner if isinstance(fs, SOptional) else fs
-    carrier = _raw_union_col(variant_col, kind_col, name, union)
+    carrier = F.struct(*[
+        F.when(
+            _variant_kind_pred(alt, kind_col),
+            F.try_variant_get(
+                variant_col, _json_path(name),
+                spark_type_for(alt).simpleString(),
+            ),
+        ).alias(f"alt_{i}")
+        for i, alt in enumerate(union.alternatives)
+    ])
     if isinstance(fs, SOptional):
         carrier = F.when(
             kind_col.isNotNull() & (kind_col != "VOID"), carrier
@@ -253,151 +251,206 @@ def variant_union_carrier(variant_col, kind_col, name: str, fs):
     return carrier
 
 
+class Failure(NamedTuple):
+    """One decode failure cell: where ``pred`` holds, the document fails
+    to decode with ``message`` at ``path``."""
+
+    pred: Column
+    path: str
+    message: str
+
+
+@dataclass(frozen=True)
+class RevisionDecode:
+    """One schema's view of the shared decode: ``row`` holds its fields
+    (aliased, in field order), ready for ``F.struct``; the failures are
+    the required-SNull cells (missing key, non-null value) and the type
+    cells (raw token present, typed slot NULL), each in field order."""
+
+    row: list[Column]
+    null_failures: list[Failure]
+    type_failures: list[Failure]
+
+
+@dataclass(frozen=True)
+class DecodedJson:
+    """The shared decode of a JSON column against one or more schemas:
+    ``frame`` is the input plus the decode's helper columns,
+    ``malformed`` the document-level failure every schema shares."""
+
+    frame: DataFrame
+    malformed: Failure
+    revisions: list[RevisionDecode]
+
+
+def decode_json(df: DataFrame, json_col: str, schemas) -> DecodedJson:
+    """Decode a string column of JSON documents ONCE for every schema in
+    ``schemas`` — the one home of the raw-JSON decode rules, shared by
+    :func:`validate_json_strings` and
+    ``migrations.validate_versioned_json_strings``.
+
+    Physical shape, whatever the number of schemas:
+
+    * ONE ``json_tuple`` extracts every field's raw token (NULL =
+      missing key or literal null) and ONE ``json_object_keys`` call
+      drives both the syntactic-malformed check and SNull key presence;
+    * schemas are grouped by field-type compatibility and each group
+      gets ONE ``from_json`` against its union-of-fields struct (a
+      single schema, or a chain of AddKey/DeleteKey migrations, is one
+      group; only a field retyped by an ``Update`` opens another);
+    * default-encoding unions decode via one ``try_parse_json`` and one
+      kind column per field name (the variant kind dispatch); each
+      distinct union's ``alt_i`` carrier is MATERIALIZED as a column so
+      the rows reference columns, never re-inlined parse trees
+      (CLAUDE.md CSE rule);
+    * required-SNull fields never enter a parse struct (NullType cannot
+      ride ``from_json``): their presence comes from the keys, their
+      value kind from the raw token.
+
+    Failure rules: malformed = the column is NULL or its top level is
+    not a JSON object; a required SNull field reports the missing-field
+    message when its key is absent and ``expected Null`` for any other
+    value; a parsed field whose raw token is present but whose typed
+    slot is NULL failed its type (``expected <Kind>``). A named/tagged
+    union instead reports the union no-match message — except a
+    REQUIRED union whose no-match the compiler already reports; an
+    optional one needs this cell, since the optional would read the
+    nulled slot as absent (a silent false Valid otherwise).
+    """
+    from ..compiler import (
+        UNION_NO_MATCH,
+        _kind_label,
+        _union_no_match_possible,
+    )
+
+    tokens: list[str] = []        # every parsed or SNull field name
+    vunions: list[tuple] = []     # distinct (name, field schema)
+    groups: list[dict] = []       # field name -> Spark DataType
+    group_of: list[int] = []
+    for schema in schemas:
+        check_raw_union_support(schema)
+        fields = {}
+        for n, fs in schema.fields:
+            if _is_variant_union(fs):
+                if (n, fs) not in vunions:
+                    vunions.append((n, fs))
+                continue
+            if n not in tokens:
+                tokens.append(n)
+            if not isinstance(fs, SNull):
+                fields[n] = spark_type_for(fs)
+        for j, g in enumerate(groups):
+            if all(g.get(n, t) == t for n, t in fields.items()):
+                g.update(fields)
+                break
+        else:
+            j = len(groups)
+            groups.append(fields)
+        group_of.append(j)
+
+    frame = _with_raw_tokens(df, json_col, tokens)
+    frame = frame.withColumn("_keys", F.json_object_keys(F.col(json_col)))
+    for j, g in enumerate(groups):
+        if g:  # a schema of SNull/variant-union fields parses nothing
+            st = StructType([StructField(n, t, True) for n, t in g.items()])
+            frame = frame.withColumn(
+                f"_doc__g{j}",
+                F.from_json(F.col(json_col), st, {"mode": "PERMISSIVE"}),
+            )
+    carriers = {}
+    if vunions:
+        frame = frame.withColumn(
+            "_variant", F.try_parse_json(F.col(json_col))
+        )
+        for n in dict.fromkeys(n for n, _ in vunions):
+            frame = frame.withColumn(
+                f"_kind__{n}",
+                F.schema_of_variant(F.try_variant_get(
+                    F.col("_variant"), _json_path(n), "variant"
+                )),
+            )
+        for i, (n, fs) in enumerate(vunions):
+            frame = frame.withColumn(f"_u__{i}", _union_carrier(
+                F.col("_variant"), F.col(f"_kind__{n}"), n, fs
+            ))
+            carriers[(n, fs)] = f"_u__{i}"
+
+    revisions = []
+    for schema, j in zip(schemas, group_of):
+        doc = F.col(f"_doc__g{j}")
+        row, null_failures, type_failures = [], [], []
+        for n, fs in schema.fields:
+            raw_present = F.col(f"_raw__{n}").isNotNull()
+            if isinstance(fs, SNull):
+                row.append(F.lit(None).cast("void").alias(n))
+                key = F.coalesce(
+                    F.array_contains(F.col("_keys"), n), F.lit(False)
+                )
+                null_failures += [
+                    Failure(~key, "", missing_field_message(n, SNull())),
+                    Failure(key & raw_present, f".{n}", "expected Null"),
+                ]
+                continue
+            if (n, fs) in carriers:
+                row.append(F.col(carriers[(n, fs)]).alias(n))
+                continue
+            row.append(doc[n].alias(n))
+            target = fs.inner if isinstance(fs, SOptional) else fs
+            if not isinstance(target, SUnion):
+                message = f"expected {_kind_label(target)}"
+            elif isinstance(fs, SOptional) \
+                    or not _union_no_match_possible(target):
+                message = UNION_NO_MATCH
+            else:
+                continue  # the compiler reports this union's no-match
+            type_failures.append(Failure(
+                doc[n].isNull() & raw_present, f".{n}", message
+            ))
+        revisions.append(RevisionDecode(row, null_failures, type_failures))
+
+    malformed = Failure(
+        F.col(json_col).isNull() | F.col("_keys").isNull(), "", MALFORMED
+    )
+    return DecodedJson(frame, malformed, revisions)
+
+
+def _cells(failures: list[Failure]) -> Column:
+    if not failures:
+        return F.array().cast(VIOLATION_DDL)
+    return F.array_compact(F.array(*[
+        F.when(f.pred, _cell(f.path, f.message)) for f in failures
+    ])).cast(VIOLATION_DDL)
+
+
 def validate_json_strings(
     df: DataFrame, json_col: str, spec, *, keep_raw: bool = False
 ) -> ValidationResult:
     """Parse a string column of JSON documents against the spec and
     validate. Malformed documents get verdict DecodingError with
-    message ``"malformed json"``; everything else follows the standard
-    3-way verdict."""
+    message ``"malformed json"``; a decode failure of
+    :func:`decode_json` is a DecodingError cell ahead of the compiled
+    structural layer; everything else follows the standard 3-way
+    verdict."""
     schema = as_schema(spec)
     if not isinstance(schema, SObject):
         raise TypeError("top-level spec must be an object")
-    check_raw_union_support(schema)
-
-    # required-SNull fields carry no data — parse every OTHER field,
-    # and check SNull fields straight off the raw JSON (presence + kind);
-    # default-encoding unions decode via the variant kind dispatch
-    null_fields = [n for n, fs in schema.fields if isinstance(fs, SNull)]
-    variant_unions = [
-        (n, fs) for n, fs in schema.fields if is_variant_union(fs)
-    ]
-    data_fields = [
-        (n, fs) for n, fs in schema.fields
-        if not isinstance(fs, SNull) and not is_variant_union(fs)
-    ]
-    st = StructType([
-        StructField(n, spark_type_for(fs), True) for n, fs in data_fields
-    ])
-    # one json_tuple pass extracts every field's raw token (NULL =
-    # missing key or literal null); one json_object_keys call drives
-    # both the syntactic-malformed check and SNull key presence
-    parsed = with_raw_tokens(
-        df, json_col,
-        [n for n, _ in data_fields] + null_fields,
-    )
-    parsed = parsed.withColumn(
-        "_keys", F.json_object_keys(F.col(json_col))
-    )
-    if data_fields:
-        parsed = parsed.withColumn(
-            "_doc",
-            F.from_json(F.col(json_col), st, {"mode": "PERMISSIVE"}),
-        )
-    union_cols = []
-    if variant_unions:
-        # one variant parse per row, one kind column per union field —
-        # MATERIALIZED as columns so the branch expressions reference
-        # columns, never re-inlined parse trees (CLAUDE.md CSE rule)
-        parsed = parsed.withColumn(
-            "_variant", F.try_parse_json(F.col(json_col))
-        )
-        for name, fs in variant_unions:
-            parsed = parsed.withColumn(
-                f"_kind__{name}",
-                F.schema_of_variant(F.try_variant_get(
-                    F.col("_variant"), _json_path(name), "variant"
-                )),
-            )
-        for name, fs in variant_unions:
-            union_cols.append(variant_union_carrier(
-                F.col("_variant"), F.col(f"_kind__{name}"), name, fs
-            ).alias(name))
-    flat_cols = [
-        F.col("_doc")[name].alias(name) for name, _ in data_fields
-    ] + union_cols + [
-        F.lit(None).cast("void").alias(name) for name in null_fields
-    ]
+    decoded = decode_json(df, json_col, [schema])
+    (rev,) = decoded.revisions
     passthrough = [c for c in df.columns if c != json_col] + (
         [json_col] if keep_raw else []
     )
-
-    # missing-key vs explicit-null for required SNull fields: presence
-    # via json_object_keys (null for non-objects → treated as missing),
-    # value kind via the raw token (NULL for both missing and literal
-    # null — presence disambiguates; non-NULL ⇒ some other value)
-    null_cells = []
-    for name in null_fields:
-        present = F.coalesce(
-            F.array_contains(F.col("_keys"), name), F.lit(False)
-        )
-        raw_val = F.col(f"_raw__{name}")
-        null_cells.append(F.when(
-            ~present, _cell("", missing_field_message(name, SNull()))
-        ))
-        null_cells.append(F.when(
-            present & raw_val.isNotNull(),
-            _cell(f".{name}", "expected Null"),
-        ))
-    null_errs = (
-        F.array_compact(F.array(*null_cells)).cast(VIOLATION_DDL)
-        if null_cells else F.array().cast(VIOLATION_DDL)
-    )
-
-    # structural-parse layer: raw token present but typed slot NULL =
-    # type failure at that field — the reference's "expected <Kind>"
-    # DecodingError (interpret.py:101-126). Union-typed fields where
-    # the compiler's no-match machinery can fire are excluded (it owns
-    # that case); a branch_fields union with an SNull alternative is
-    # the exception — there _union_matched is constant-true (an all-null
-    # struct IS the SNull match), so a wrong-kind raw value that
-    # from_json nulls out would otherwise validate as a false Valid.
-    # The raw token disambiguates: non-null token + null struct slot =
-    # the value matched no alternative.
-    from ..compiler import UNION_NO_MATCH, _kind_label, _union_no_match_possible
-
-    mismatch_cells = []
-    for name, fs in data_fields:
-        target = fs.inner if isinstance(fs, SOptional) else fs
-        if isinstance(target, SUnion):
-            # the compiler's no-match machinery only covers REQUIRED
-            # unions: for an SOptional wrap, from_json nulls the slot
-            # on a wrong-kind value and the optional treats null as
-            # absent — without the raw-token check here that was a
-            # silent false-Valid (round-3 review finding)
-            if _union_no_match_possible(target) \
-                    and not isinstance(fs, SOptional):
-                continue
-            mismatch_cells.append(F.when(
-                F.col("_doc")[name].isNull()
-                & F.col(f"_raw__{name}").isNotNull(),
-                _cell(f".{name}", UNION_NO_MATCH),
-            ))
-            continue
-        mismatch_cells.append(F.when(
-            F.col("_doc")[name].isNull()
-            & F.col(f"_raw__{name}").isNotNull(),
-            _cell(f".{name}", f"expected {_kind_label(target)}"),
-        ))
-    mismatch_errs = (
-        F.array_compact(F.array(*mismatch_cells)).cast(VIOLATION_DDL)
-        if mismatch_cells else F.array().cast(VIOLATION_DDL)
-    )
-
-    flat = parsed.select(
+    flat = decoded.frame.select(
         *[F.col(c) for c in passthrough],
-        (
-            F.col(json_col).isNull() | F.col("_keys").isNull()
-        ).alias("_malformed"),
-        null_errs.alias("_null_errs"),
-        mismatch_errs.alias("_mismatch_errs"),
-        *flat_cols,
+        decoded.malformed.pred.alias("_malformed"),
+        _cells(rev.null_failures).alias("_null_errs"),
+        _cells(rev.type_failures).alias("_mismatch_errs"),
+        *rev.row,
     )
     res = validate(flat, schema)
-    ann = res.annotated
-    malformed_err = F.array(_cell("", MALFORMED))
     structural = (
-        F.when(F.col("_malformed"), malformed_err)
+        F.when(F.col("_malformed"), F.array(
+            _cell(decoded.malformed.path, decoded.malformed.message)
+        ))
         .otherwise(F.concat(
             F.col("_null_errs"), F.col("_mismatch_errs"),
             F.col(STRUCTURAL_COL),
@@ -407,7 +460,7 @@ def validate_json_strings(
         F.col(STRUCTURAL_COL), F.col(VIOLATIONS_COL)
     )
     ann = (
-        ann
+        res.annotated
         .withColumn(STRUCTURAL_COL, structural)
         .withColumn(VERDICT_COL, verdict)
         .withColumn(DECODING_ERROR_COL, decoding_error)

@@ -84,6 +84,11 @@ def spread_for_compute(df: DataFrame, *, min_tasks: int | None = None) -> DataFr
     (joins, aggregations, per-row projections) is unchanged; do not use
     it where partition ORDER feeds results (collect_list outputs,
     float cross-row sum tie-breaking) without checking the consumer.
+
+    Call it directly on a scan only. The partition-count probe
+    (``df.rdd.getNumPartitions()``) plans the frame, and above an
+    exchange that runs the AQE shuffle stages below it — eager jobs at
+    query-build time.
     """
     sc = df.sparkSession.sparkContext
     want = min_tasks or sc.defaultParallelism

@@ -28,10 +28,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .compiler import (
+    VIOLATION_DDL,
     SchemaMismatchError,
     check_conformance,
     compile_regex_preflight,
     compile_structural,
+    compile_valid_mask,
     compile_violations,
 )
 from .schema.ast import SObject, Schema
@@ -252,15 +254,12 @@ def validate(
             f"(they would be silently overwritten)"
         )
     row = F.struct(*[F.col(n).alias(n) for n in schema.field_names()])
-    empty_path = F.lit("")
+    trees = compile_verdict_columns(schema, row)
     # valid-mask fast path: a flat predicate chain decides "no errors at
     # all" first; the expensive array/path-building trees run only on
     # rows that failed it (on mostly-valid data: predicates only)
-    from .compiler import compile_valid_mask
-
-    empty = F.array().cast("array<struct<path:string,error:string>>")
-    mask = compile_valid_mask(schema, row)
-    annotated = df.withColumn("_row_ok", mask)
+    empty = F.array().cast(VIOLATION_DDL)
+    annotated = df.withColumn("_row_ok", compile_valid_mask(schema, row))
     # two-stage projection: the expensive violation/structural trees are
     # materialized as columns first; verdict/decoding_error reference the
     # COLUMNS (not re-inlined trees — CollapseProject keeps non-cheap
@@ -269,15 +268,11 @@ def validate(
         annotated
         .withColumn(
             STRUCTURAL_COL,
-            F.when(F.col("_row_ok"), empty).otherwise(
-                compile_structural(schema, row, empty_path)
-            ),
+            F.when(F.col("_row_ok"), empty).otherwise(trees[STRUCTURAL_COL]),
         )
         .withColumn(
             VIOLATIONS_COL,
-            F.when(F.col("_row_ok"), empty).otherwise(
-                compile_violations(schema, row, empty_path)
-            ),
+            F.when(F.col("_row_ok"), empty).otherwise(trees[VIOLATIONS_COL]),
         )
         .drop("_row_ok")
     )

@@ -8,6 +8,12 @@ must agree with the pure interpreter fed the json-parsed value —
     must appear in the engine's (superset) structural list,
   * syntactically malformed strings → exactly ``"malformed json"``.
 
+The versioned entry point ``validate_versioned_json_strings`` decodes
+through the same layer and must agree with ``validate_json_strings``
+over the same documents: a one-revision spec keeps exactly the Valid
+rows and rejects the rest with the same verdict, and after an AddKey
+every row lands at the newest revision it is Valid under.
+
 Corruption modes fuzzed: missing required keys (any depth), explicit
 nulls under SOptional, constraint-violating values of the CORRECT kind,
 null array elements, SNull three-way (missing / explicit null / wrong
@@ -24,7 +30,21 @@ import random
 
 import pytest
 
-from schematic_spark.schema.ast import Schema, SNull, SObject, SOptional
+from schematic_spark.migrations import (
+    AddKey,
+    Diff,
+    Migration,
+    VersionedSpec,
+    validate_versioned_json_strings,
+)
+from schematic_spark.schema.ast import (
+    NGt,
+    Schema,
+    SNull,
+    SNumber,
+    SObject,
+    SOptional,
+)
 from schematic_spark.schema.interpret import parse_and_validate
 from schematic_spark.sources.json_ingest import validate_json_strings
 from test_differential_property import _rand_schema, _rand_value
@@ -88,6 +108,62 @@ def _absent_instead_of_null(value, schema: Schema):
     return value
 
 
+def _assert_versioned_agrees(spark, rows, schema, verdicts, seed):
+    """``validate_versioned_json_strings`` against ``validate_json_strings``
+    (``verdicts``: row_id → its verdict over ``rows``)."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(rows, "row_id int, raw string")
+    upgraded, rejected = validate_versioned_json_strings(
+        df, "raw", VersionedSpec(base=schema)
+    )
+    assert sorted(r["row_id"] for r in upgraded.collect()) == sorted(
+        i for i, v in verdicts.items() if v == "Valid"
+    )
+    assert {r["row_id"]: r["_verdict"] for r in rejected.collect()} == {
+        i: v for i, v in verdicts.items() if v != "Valid"
+    }
+
+    # AddKey of a required constrained number: absent, valid, violating
+    # and wrong-kind values send rows to either revision or to neither
+    rng = random.Random(seed)
+    xrows = []
+    for i, raw in rows:
+        try:
+            doc = json.loads(raw)
+        except ValueError:
+            xrows.append((i, raw))  # malformed stays malformed
+            continue
+        x = rng.choice([MISSING, 5.0, -1.0, "five"])
+        if x is not MISSING:
+            doc["xtra"] = x
+        xrows.append((i, json.dumps(doc)))
+    spec = VersionedSpec(
+        base=schema,
+        migrations=[Migration(
+            "add_xtra", (Diff((), AddKey("xtra", SNumber((NGt(0),)))),)
+        )],
+        upgrades={"add_xtra": lambda d: d.withColumn("xtra", F.lit(1.0))
+                  .withColumn("_lifted", F.lit(True))},
+    )
+    df = spark.createDataFrame(xrows, "row_id int, raw string")
+    newest = {}
+    for rev, rev_schema in spec.versions():  # newest first
+        res = validate_json_strings(df, "raw", rev_schema)
+        for r in res.annotated.select("row_id", "_verdict").collect():
+            if r["_verdict"] == "Valid":
+                newest.setdefault(r["row_id"], rev)
+    upgraded, rejected = validate_versioned_json_strings(df, "raw", spec)
+    landed = {
+        r["row_id"]: "initial" if r["_lifted"] else "add_xtra"
+        for r in upgraded.collect()
+    }
+    assert landed == newest
+    assert sorted(r["row_id"] for r in rejected.collect()) == sorted(
+        i for i, _ in rows if i not in newest
+    )
+
+
 @pytest.mark.parametrize("seed", [5, 17, 41])
 def test_raw_json_matches_interpreter(spark, seed):
     from schematic_spark.schema.verifier import (
@@ -149,6 +225,9 @@ def test_raw_json_matches_interpreter(spark, seed):
             assert expect.decoding_error in msgs, (
                 i, raw, expect.decoding_error, msgs,
             )
+    _assert_versioned_agrees(
+        spark, rows, schema, {i: g["_verdict"] for i, g in got.items()}, seed
+    )
 
 
 @pytest.mark.parametrize("seed", [3, 29])
@@ -287,3 +366,6 @@ def test_raw_json_union_encodings_match_interpreter(spark, seed):
             assert expect.decoding_error in msgs, (
                 i, raw, expect.decoding_error, msgs,
             )
+    _assert_versioned_agrees(
+        spark, rows, schema, {i: g["_verdict"] for i, g in got.items()}, seed
+    )

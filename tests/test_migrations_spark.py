@@ -372,6 +372,15 @@ class TestCheckpointOnePass:
         assert read_violations(spark, fmt).count() == 10
 
 
+def _assert_one_decode(frame, *, parse_groups: int) -> None:
+    """The optimized plan decodes each document once: one from_json per
+    parse group, one json_tuple and one json_object_keys."""
+    plan = frame._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("from_json(") == parse_groups, plan
+    assert plan.count("json_tuple(") == 1, plan
+    assert plan.count("jsonObjectKeys(") == 1, plan
+
+
 class TestVersionedJsonRound3:
     """Round-3 rework: single-parse groups, per-revision type failure,
     SNull + union fields over raw JSON (ADVICE r2 high/medium)."""
@@ -434,8 +443,10 @@ class TestVersionedJsonRound3:
     def test_single_from_json_for_addkey_chain(self, spark):
         # Task: 'plan shows one JsonToStructs' — an AddKey/DeleteKey chain
         # must share ONE parse group (per-revision parses were O(N) full
-        # JSON parses per row).
+        # JSON parses per row); the single-schema entry point decodes
+        # through the same layer
         from schematic_spark.migrations import validate_versioned_json_strings
+        from schematic_spark.sources.json_ingest import validate_json_strings
 
         spec = VersionedSpec(
             base=BASE,
@@ -447,8 +458,42 @@ class TestVersionedJsonRound3:
         df = spark.createDataFrame([("k", '{"foo":[13]}')],
                                    "k string, raw string")
         upgraded, rejected = validate_versioned_json_strings(df, "raw", spec)
-        plan = rejected._jdf.queryExecution().optimizedPlan().toString()
-        assert plan.count("from_json") == 1, plan
+        _assert_one_decode(rejected, parse_groups=1)
+        res = validate_json_strings(df, "raw", spec.top())
+        _assert_one_decode(res.annotated, parse_groups=1)
+
+    def test_one_from_json_per_parse_group(self, spark):
+        # a field retyped by Update opens a second parse group, and only
+        # that: still one json_tuple and one json_object_keys per row
+        from schematic_spark.migrations import validate_versioned_json_strings
+        from schematic_spark.schema import SNull, SUnion
+
+        base = SObject((
+            ("foo", SText()),
+            ("bar", SText()),
+            ("marker", SNull()),
+            ("u", SOptional(SUnion((SText(), SNumber())))),
+        ))
+        spec = VersionedSpec(
+            base=base,
+            migrations=[
+                Migration("add_quux", (Diff((), AddKey("quux", SNumber())),)),
+                Migration("bar_to_num",
+                          (Diff(("bar",), Update(SNumber((NGt(0),)))),)),
+            ],
+            upgrades={
+                "add_quux": add_column_upgrade("quux", 1.0),
+                "bar_to_num": lambda d: d.withColumn("bar", F.lit(7.0)),
+            },
+        )
+        df = spark.createDataFrame(
+            [("k", '{"foo":"a","bar":"b","marker":null,"u":3}')],
+            "k string, raw string",
+        )
+        upgraded, rejected = validate_versioned_json_strings(df, "raw", spec)
+        _assert_one_decode(rejected, parse_groups=2)
+        assert [(r["k"], r["bar"], r["quux"]) for r in upgraded.collect()] \
+            == [("k", 7.0, 1.0)]
 
     def test_union_field_versioned_raw(self, spark):
         from schematic_spark.migrations import validate_versioned_json_strings
